@@ -37,13 +37,13 @@ import graft.operators.AsOfJoin
   *  - `ORDER BY col WITH FILL [FROM a] [TO b] [STEP s]` → grid UNION ALL
   *    anti-join (gap rows generated from `sequence()`, never on the driver)
   *
-  * All scanners are literal-aware (a keyword inside '…'/`…` is data) via the
-  * shared GraftSession helpers. Documented divergences from ClickHouse are
-  * called out per rewrite below.
+  * Every pattern runs on [[SqlLexer]]'s code mask, so a keyword inside a
+  * literal is data. Documented divergences from ClickHouse are called out
+  * per rewrite below.
   */
 private[engine] trait DialectWave2 { self: GraftSession =>
+  import SqlLexer.{clauseExtent, matchParen, parenBalanced, splitTopLevel, topLevelKeyword}
 
-  private def qr(s: String): String = Regex.quoteReplacement(s)
   // ASOF rewrite builds the replacement text before the view name is minted
   // (reference rewriting must inspect it first); this token marks the slot.
   private val vnPlaceholder = "__graft_asof_vn__"
@@ -55,11 +55,11 @@ private[engine] trait DialectWave2 { self: GraftSession =>
   // (autoBroadcastJoinThreshold, runtime size re-plan), so the hint is the
   // identity — accepted and dropped. `x.global IN (…)` (a column literally
   // named global) is protected by the lookbehind.
-  private val globalRe =
-    ("(?i)(?<![.\\w])GLOBAL\\s+(?=(?:ANY|ALL|ASOF|SEMI|ANTI|INNER|LEFT|RIGHT" +
-      "|FULL|CROSS|JOIN|IN|NOT)\\b)").r
+  private val globalRe = SqlLexer.regex(
+    "(?i)(?<![.\\w])GLOBAL\\s+(?=(?:ANY|ALL|ASOF|SEMI|ANTI|INNER|LEFT|RIGHT" +
+      "|FULL|CROSS|JOIN|IN|NOT)\\b)")
   private[engine] def dropGlobal(q: String): String =
-    globalRe.replaceAllIn(q, m => if (inLiteralAt(q, m.start)) qr(m.matched) else "")
+    globalRe.replaceAllIn(q, _ => "")
 
   // ---- strictness keyword normalization -----------------------------------
   // ClickHouse spells strictness BEFORE the direction (`SEMI LEFT JOIN`);
@@ -71,32 +71,29 @@ private[engine] trait DialectWave2 { self: GraftSession =>
   // (the result carries only right-side columns, and the ON condition is
   // side-symmetric text). The swap needs both sides as named relations; a
   // subquery side still refuses with guidance.
-  private val semiAntiRightRe =
-    ("(?is)\\bFROM\\s+([A-Za-z_][\\w.]*|`[^`]+`)" +
+  private val semiAntiRightRe = SqlLexer.regex(
+    "(?is)\\bFROM\\s+([A-Za-z_][\\w.]*|`[^`]+`)" +
       "((?:\\s+(?:AS\\s+)?(?!(?:SEMI|ANTI|LEFT|INNER|CROSS|JOIN|WHERE|GROUP" +
       "|ORDER|LIMIT|HAVING|UNION|ON|USING|SAMPLE|FINAL)\\b)[A-Za-z_]\\w*)?)" +
       "\\s+(SEMI|ANTI)\\s+RIGHT\\s+JOIN\\s+([A-Za-z_][\\w.]*|`[^`]+`)" +
-      "((?:\\s+(?:AS\\s+)?(?!ON\\b)[A-Za-z_]\\w*)?)\\s+(ON|USING)\\b").r
-  private val semiAntiRe = "(?i)\\b(SEMI|ANTI)\\s+(LEFT|RIGHT)\\s+JOIN\\b".r
-  private val allJoinRe = "(?i)\\bALL\\s+(?=(?:INNER|LEFT|RIGHT|FULL|JOIN)\\b)".r
-  private[engine] def normalizeJoinStrictness(q: String): String = {
-    val s0 = semiAntiRightRe.replaceAllIn(q, { m =>
-      if (inLiteralAt(q, m.start)) qr(m.matched)
-      else qr(s"FROM ${m.group(4)}${m.group(5)} " +
+      "((?:\\s+(?:AS\\s+)?(?!ON\\b)[A-Za-z_]\\w*)?)\\s+(ON|USING)\\b")
+  private val semiAntiRe = SqlLexer.regex("(?i)\\b(SEMI|ANTI)\\s+(LEFT|RIGHT)\\s+JOIN\\b")
+  private val allJoinRe = SqlLexer.regex("(?i)\\bALL\\s+(?=(?:INNER|LEFT|RIGHT|FULL|JOIN)\\b)")
+  private[engine] def normalizeStrictness(q: String): String = {
+    val s0 = semiAntiRightRe.replaceAllIn(q, m =>
+      s"FROM ${m.group(4)}${m.group(5)} " +
         s"LEFT ${m.group(3).toUpperCase(Locale.ROOT)} JOIN " +
         s"${m.group(1)}${m.group(2)} ${m.group(6).toUpperCase(Locale.ROOT)}")
-    })
     val s1 = semiAntiRe.replaceAllIn(s0, { m =>
-      if (inLiteralAt(s0, m.start)) qr(m.matched)
-      else if (m.group(2).equalsIgnoreCase("RIGHT"))
+      if (m.group(2).equalsIgnoreCase("RIGHT"))
         throw new UnsupportedOperationException(
           s"${m.group(1).toUpperCase(Locale.ROOT)} RIGHT JOIN is supported " +
             "only with named relations on both sides (the rewrite swaps " +
             "them to the LEFT form) — wrap subquery sides in temp views")
-      else qr(s"${m.group(2).toUpperCase(Locale.ROOT)} " +
-        s"${m.group(1).toUpperCase(Locale.ROOT)} JOIN")
+      else s"${m.group(2).toUpperCase(Locale.ROOT)} " +
+        s"${m.group(1).toUpperCase(Locale.ROOT)} JOIN"
     })
-    allJoinRe.replaceAllIn(s1, m => if (inLiteralAt(s1, m.start)) qr(m.matched) else "")
+    allJoinRe.replaceAllIn(s1, _ => "")
   }
 
   // ---- shared join-clause scanning ----------------------------------------
@@ -112,73 +109,13 @@ private[engine] trait DialectWave2 { self: GraftSession =>
   private val fromBounds = Seq("WHERE", "GROUP", "HAVING", "ORDER", "LIMIT",
     "WINDOW", "UNION", "INTERSECT", "EXCEPT", "SETTINGS", "FORMAT")
 
-  /** Exclusive end of the clause starting at `from`: the first bound keyword
-    * at the SAME paren depth (skipping string/backtick literals and bound
-    * words that open a call), or the enclosing scope's ')' position, or EOS.
-    * `from` must itself be outside literals.
-    */
-  private[engine] def clauseExtent(s: String, from: Int, bounds: Seq[String]): Int = {
-    val u = s.toUpperCase(Locale.ROOT)
-    def isWordChar(c: Char): Boolean = Character.isLetterOrDigit(c) || c == '_'
-    var d = 0; var i = from; var inStr = false; var inTick = false
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else if (inTick) { if (c == '`') inTick = false }
-      else c match {
-        case '\'' => inStr = true
-        case '`' => inTick = true
-        case '(' => d += 1
-        case ')' => d -= 1; if (d < 0) return i
-        case _ =>
-          if (d == 0 && (i == 0 || !isWordChar(s.charAt(i - 1)))) {
-            var bi = 0
-            while (bi < bounds.length) {
-              val k = bounds(bi)
-              if (u.startsWith(k, i) &&
-                  (i + k.length >= u.length || !isWordChar(u.charAt(i + k.length)))) {
-                // a bound word opening a call (`left('x', 2)`) is a function
-                var j = i + k.length
-                while (j < s.length && Character.isWhitespace(s.charAt(j))) j += 1
-                if (j >= s.length || s.charAt(j) != '(') return i
-              }
-              bi += 1
-            }
-          }
-      }
-      i += 1
-    }
-    s.length
-  }
-
-  /** Split on a top-level keyword (outside parens/literals), e.g. AND. */
-  private def splitTopLevelWord(s: String, word: String): Seq[String] = {
-    val u = s.toUpperCase(Locale.ROOT)
-    val k = word.toUpperCase(Locale.ROOT)
-    def isWordChar(c: Char): Boolean = Character.isLetterOrDigit(c) || c == '_'
-    val out = Seq.newBuilder[String]
-    var d = 0; var i = 0; var start = 0; var inStr = false; var inTick = false
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else if (inTick) { if (c == '`') inTick = false }
-      else c match {
-        case '\'' => inStr = true
-        case '`' => inTick = true
-        case '(' => d += 1
-        case ')' => d -= 1
-        case _ =>
-          if (d == 0 && u.startsWith(k, i) &&
-              (i == 0 || !isWordChar(u.charAt(i - 1))) &&
-              (i + k.length >= u.length || !isWordChar(u.charAt(i + k.length)))) {
-            out += s.substring(start, i); start = i + k.length; i += k.length - 1
-          }
-      }
-      i += 1
-    }
-    out += s.substring(start)
-    out.result().map(_.trim).filter(_.nonEmpty)
-  }
+  // shared pieces of ORDER BY / projection-list parsing
+  private[engine] val orderByRe = SqlLexer.regex("(?is)^(.*\\S)\\s+ORDER\\s+BY\\s+(.+)$")
+  private[engine] val orderModRe = SqlLexer.regex(
+    "(?is)^(.+?)(\\s+(?:ASC|DESC))?(\\s+NULLS\\s+(?:FIRST|LAST))?\\s*$")
+  /** `expr AS alias` → (expr, alias) */
+  private[engine] val trailingAliasRe =
+    SqlLexer.regex("(?is)^(.+?)\\s+AS\\s+([A-Za-z_]\\w*|`[^`]+`)\\s*$")
 
   private def unquoteIdent(s: String): String = {
     val t = s.trim
@@ -216,18 +153,18 @@ private[engine] trait DialectWave2 { self: GraftSession =>
   // ClickHouse's non-deterministic any-pick to the stable lexicographic
   // minimum on each side. Subquery sides of either form are lifted into
   // temp views first (the ASOF lifting device, r19).
-  private val anyRightNamedRe =
-    ("(?is)\\bFROM\\s+([A-Za-z_][\\w.]*|`[^`]+`)" +
+  private val anyRightNamedRe = SqlLexer.regex(
+    "(?is)\\bFROM\\s+([A-Za-z_][\\w.]*|`[^`]+`)" +
       "((?:\\s+(?:AS\\s+)?(?!(?:SEMI|ANTI|ANY|LEFT|INNER|CROSS|JOIN|WHERE|GROUP" +
       "|ORDER|LIMIT|HAVING|UNION|ON|USING|SAMPLE|FINAL)\\b)[A-Za-z_]\\w*)?)" +
       "\\s+ANY\\s+(RIGHT|FULL)\\s+JOIN\\s+([A-Za-z_][\\w.]*|`[^`]+`)" +
-      "((?:\\s+(?:AS\\s+)?(?!(?:ON|USING)\\b)[A-Za-z_]\\w*)?)\\s+(ON|USING)\\b").r
-  private val anyRightRe = "(?i)\\bANY\\s+(RIGHT|FULL)\\s+JOIN\\b".r
-  private val anyJoinRe =
-    ("(?is)\\bANY\\s+((?:LEFT|INNER)\\s+)?JOIN\\s+([A-Za-z_][\\w.]*|`[^`]+`)" +
-      "((?:\\s+(?:AS\\s+)?(?!(?:ON|USING)\\b)[A-Za-z_]\\w*)?)\\s+(ON|USING)\\b").r
+      "((?:\\s+(?:AS\\s+)?(?!(?:ON|USING)\\b)[A-Za-z_]\\w*)?)\\s+(ON|USING)\\b")
+  private val anyRightRe = SqlLexer.regex("(?i)\\bANY\\s+(RIGHT|FULL)\\s+JOIN\\b")
+  private val anyJoinRe = SqlLexer.regex(
+    "(?is)\\bANY\\s+((?:LEFT|INNER)\\s+)?JOIN\\s+([A-Za-z_][\\w.]*|`[^`]+`)" +
+      "((?:\\s+(?:AS\\s+)?(?!(?:ON|USING)\\b)[A-Za-z_]\\w*)?)\\s+(ON|USING)\\b")
   private val anyLeftoverRe =
-    "(?i)\\bANY\\s+((?:LEFT|INNER)\\s+)?JOIN\\b".r
+    SqlLexer.regex("(?i)\\bANY\\s+((?:LEFT|INNER)\\s+)?JOIN\\b")
   /** `(SELECT …)` text deduplicating `rel` to one row per `keys` — the ANY
     * contract: keep the lexicographically smallest non-key row per key
     * (schema order, ASC NULLS FIRST; map columns excluded as unorderable).
@@ -252,7 +189,7 @@ private[engine] trait DialectWave2 { self: GraftSession =>
     * be a plain equality with exactly one side qualified by `alias`.
     */
   private def anyKeysFor(alias: String, cond: String, joinName: String): Seq[String] =
-    splitTopLevelWord(cond, "AND").map { c =>
+    splitTopLevel(cond, "AND").map { c =>
       require(c.matches("(?s)^[^=<>!]+=[^=<>!]+$"),
         s"$joinName supports only AND-chained equality conditions (got '$c')")
       val refs = c.split("=", 2).map(_.trim)
@@ -269,7 +206,7 @@ private[engine] trait DialectWave2 { self: GraftSession =>
     * FULL) + plain RIGHT/FULL JOIN; recurses until none remain.
     */
   private def rewriteAnyRightOnce(q: String): String =
-    anyRightNamedRe.findAllMatchIn(q).find(m => !inLiteralAt(q, m.start)) match {
+    anyRightNamedRe.findFirstIn(q) match {
       case Some(m) =>
         val lt = m.group(1)
         val laRaw = m.group(2).trim
@@ -313,14 +250,14 @@ private[engine] trait DialectWave2 { self: GraftSession =>
   @tailrec
   private[engine] final def rewriteAnyJoin(qIn: String): String = {
     val q = rewriteAnyRightOnce(liftAnySubqueries(qIn))
-    anyRightRe.findAllMatchIn(q).find(m => !inLiteralAt(q, m.start)).foreach { m =>
+    anyRightRe.findFirstIn(q).foreach { m =>
       throw new UnsupportedOperationException(
         s"ANY ${m.group(1).toUpperCase(Locale.ROOT)} JOIN is supported as: " +
           "FROM <table|(subquery)> [alias] ANY RIGHT|FULL JOIN " +
           "<table|(subquery)> [alias] ON <equalities>/USING (cols) — " +
           "an unaliased subquery side needs an alias for the lift")
     }
-    anyJoinRe.findAllMatchIn(q).find(m => !inLiteralAt(q, m.start)) match {
+    anyJoinRe.findFirstIn(q) match {
       case Some(m) =>
         val joinWord =
           Option(m.group(1)).map(_.trim.toUpperCase(Locale.ROOT)).getOrElse("INNER")
@@ -340,7 +277,7 @@ private[engine] trait DialectWave2 { self: GraftSession =>
               else cond
             splitTopLevel(inner).map(unquoteIdent)
           } else {
-            splitTopLevelWord(cond, "AND").map { c =>
+            splitTopLevel(cond, "AND").map { c =>
               // exactly one bare '=' — a '!='/'<='/'>' condition is not a
               // dedup key and would silently break the at-most-one contract
               require(c.matches("(?s)^[^=<>!]+=[^=<>!]+$"),
@@ -355,35 +292,22 @@ private[engine] trait DialectWave2 { self: GraftSession =>
               unquoteIdent(rRef.split("\\.", 2)(1))
             }
           }
-        val keysLower = keys.map(_.toLowerCase(Locale.ROOT)).toSet
-        val schema = probeSchema(rt)
-        val ordCols = schema.fields.toSeq
-          .filterNot(f => keysLower(f.name.toLowerCase(Locale.ROOT)) ||
-            f.dataType.isInstanceOf[MapType])
-          .map(f => s"`${f.name}` ASC NULLS FIRST")
-        val ord =
-          if (ordCols.nonEmpty) ordCols.mkString(", ")
-          else keys.map(k => s"`$k`").mkString(", ")
-        val part = keys.map(k => s"`$k`").mkString(", ")
         val jw = if (joinWord == "INNER") "JOIN" else s"$joinWord JOIN"
         val aliasText = if (raRaw.isEmpty) ra else raRaw
-        val sub = s"(SELECT * EXCEPT (__graft_any_rn) FROM (SELECT *, " +
-          s"row_number() OVER (PARTITION BY $part ORDER BY $ord) AS " +
-          s"__graft_any_rn FROM $rt) __graft_any_i WHERE __graft_any_rn = 1)"
+        val sub = anyDedupSub(rt, keys, "any_i")
         rewriteAnyJoin(q.substring(0, m.start) +
           s"$jw $sub $aliasText ${m.group(4)}" + q.substring(m.end))
       case _ =>
         // leftover ANY JOIN = a shape the rewriter does not parse (subquery
         // or quoted right side). Spark would silently read `ANY` as a table
         // alias and run a plain join — fail with the contract instead.
-        anyLeftoverRe.findAllMatchIn(q).find(m => !inLiteralAt(q, m.start))
-          .foreach { _ =>
-            throw new UnsupportedOperationException(
-              "ANY JOIN is supported as: ANY [LEFT|INNER] JOIN <table> [alias] " +
-                "ON <equalities>/USING (cols) — wrap subquery sides in named " +
-                "temp views first (a relation literally aliased `any` must be " +
-                "renamed on this surface)")
-          }
+        anyLeftoverRe.findFirstIn(q).foreach { _ =>
+          throw new UnsupportedOperationException(
+            "ANY JOIN is supported as: ANY [LEFT|INNER] JOIN <table> [alias] " +
+              "ON <equalities>/USING (cols) — wrap subquery sides in named " +
+              "temp views first (a relation literally aliased `any` must be " +
+              "renamed on this surface)")
+        }
         q
     }
   }
@@ -402,29 +326,27 @@ private[engine] trait DialectWave2 { self: GraftSession =>
   // collide with left column names are refused (project/rename first). The
   // matched right timestamp is exposed under its own column name when it
   // differs from the left's (ClickHouse exposes r.ts the same way).
-  private val asofRe =
-    ("(?is)\\bFROM\\s+([A-Za-z_][\\w.]*|`[^`]+`)" +
+  private val asofRe = SqlLexer.regex(
+    "(?is)\\bFROM\\s+([A-Za-z_][\\w.]*|`[^`]+`)" +
       "((?:\\s+(?:AS\\s+)?(?!(?:ASOF|LEFT|INNER|CROSS|JOIN|WHERE|GROUP|ORDER" +
       "|LIMIT|HAVING|UNION|ON|USING|SAMPLE|FINAL)\\b)[A-Za-z_]\\w*)?)" +
       "\\s+ASOF\\s+(LEFT\\s+)?JOIN\\s+([A-Za-z_][\\w.]*|`[^`]+`)" +
-      "((?:\\s+(?:AS\\s+)?(?!ON\\b)[A-Za-z_]\\w*)?)\\s+ON\\b").r
-  private val asofLeftoverRe = "(?i)\\bASOF\\s+(LEFT\\s+)?JOIN\\b".r
+      "((?:\\s+(?:AS\\s+)?(?!ON\\b)[A-Za-z_]\\w*)?)\\s+ON\\b")
+  private val asofLeftoverRe = SqlLexer.regex("(?i)\\bASOF\\s+(LEFT\\s+)?JOIN\\b")
   // `ASOF [LEFT] JOIN t USING (k1, …, kn, ts)` (r18 — the ClickHouse
   // shorthand; DuckDB spells it identically): the LAST listed column is the
   // inequality column with >= (backward) semantics, the rest are equality
   // keys. Rewritten textually to the ON form; both sides then share the
   // key/ts names, so the ON machinery's same-name handling applies.
-  private val asofUsingRe =
-    ("(?is)\\bFROM\\s+([A-Za-z_][\\w.]*|`[^`]+`)" +
+  private val asofUsingRe = SqlLexer.regex(
+    "(?is)\\bFROM\\s+([A-Za-z_][\\w.]*|`[^`]+`)" +
       "((?:\\s+(?:AS\\s+)?(?!(?:ASOF|LEFT|INNER|CROSS|JOIN|WHERE|GROUP|ORDER" +
       "|LIMIT|HAVING|UNION|ON|USING|SAMPLE|FINAL)\\b)[A-Za-z_]\\w*)?)" +
       "\\s+ASOF\\s+(LEFT\\s+)?JOIN\\s+([A-Za-z_][\\w.]*|`[^`]+`)" +
       "((?:\\s+(?:AS\\s+)?(?!(?:ON|USING)\\b)[A-Za-z_]\\w*)?)" +
-      "\\s+USING\\s*\\(([^)]*)\\)").r
+      "\\s+USING\\s*\\(([^)]*)\\)")
   private def rewriteAsofUsing(q: String): String =
     asofUsingRe.replaceAllIn(q, { m =>
-      if (inLiteralAt(q, m.start)) qr(m.matched)
-      else {
         def aliasOf(name: String, aliasGrp: String): String = {
           val a = aliasGrp.trim.replaceFirst("(?i)^AS\\s+", "")
           if (a.isEmpty) unquoteIdent(name).split('.').last else a
@@ -437,10 +359,9 @@ private[engine] trait DialectWave2 { self: GraftSession =>
         val ts = cols.last
         val conds = cols.init.map(k => s"$lAlias.`$k` = $rAlias.`$k`") :+
           s"$lAlias.`$ts` >= $rAlias.`$ts`"
-        qr(s"FROM ${m.group(1)}${m.group(2)} ASOF " +
+        s"FROM ${m.group(1)}${m.group(2)} ASOF " +
           s"${Option(m.group(3)).getOrElse("")}JOIN ${m.group(4)}${m.group(5)} " +
-          s"ON ${conds.mkString(" AND ")}")
-      }
+          s"ON ${conds.mkString(" AND ")}"
     })
   private[engine] def rewriteAsofJoin(q: String): String = {
     val lifted = rewriteAsofUsing(liftAsofSubqueries(q))
@@ -448,13 +369,12 @@ private[engine] trait DialectWave2 { self: GraftSession =>
     if (out eq lifted) {
       // leftover ASOF JOIN (any depth) = a shape v1 does not parse; fail
       // with the contract instead of Spark's opaque parse error
-      asofLeftoverRe.findAllMatchIn(lifted).find(m => !inLiteralAt(lifted, m.start))
-        .foreach { _ =>
-          throw new UnsupportedOperationException(
-            "ASOF JOIN is supported as: FROM <table|(subquery)> [alias] ASOF " +
-              "[LEFT] JOIN <table|(subquery)> [alias] ON <equi-conditions " +
-              "AND one >=/<=/>/< condition>")
-        }
+      asofLeftoverRe.findFirstIn(lifted).foreach { _ =>
+        throw new UnsupportedOperationException(
+          "ASOF JOIN is supported as: FROM <table|(subquery)> [alias] ASOF " +
+            "[LEFT] JOIN <table|(subquery)> [alias] ON <equi-conditions " +
+            "AND one >=/<=/>/< condition>")
+      }
       lifted
     } else rewriteAsofJoin(out)
   }
@@ -468,38 +388,18 @@ private[engine] trait DialectWave2 { self: GraftSession =>
     * consumed.
     */
   private def liftAsofSubqueries(q: String): String =
-    liftJoinSubqueries(q, s => asofLeftoverRe.findAllMatchIn(s)
-      .find(m => !inLiteralAt(s, m.start)).map(_.start))
+    liftJoinSubqueries(q, asofLeftoverRe)
 
   /** ANY-join flavor of the same lift (r19) — closes the r18 refusal on
     * subquery-sided ANY RIGHT and enables subquery sides for ANY FULL.
     */
   private val anyAnyRe =
-    "(?i)\\bANY\\s+(?:(?:RIGHT|FULL|LEFT|INNER)\\s+)?JOIN\\b".r
+    SqlLexer.regex("(?i)\\bANY\\s+(?:(?:RIGHT|FULL|LEFT|INNER)\\s+)?JOIN\\b")
   private def liftAnySubqueries(q: String): String =
-    liftJoinSubqueries(q, s => anyAnyRe.findAllMatchIn(s)
-      .find(m => !inLiteralAt(s, m.start)).map(_.start))
+    liftJoinSubqueries(q, anyAnyRe)
 
-  private def liftJoinSubqueries(q: String,
-      findKw: String => Option[Int]): String = {
-    val asofAt = findKw(q).getOrElse(return q)
-    def matchForward(open: Int): Int = { // index of the matching ')'
-      var d = 0; var i = open; var inStr = false; var inTick = false
-      while (i < q.length) {
-        val c = q.charAt(i)
-        if (inStr) { if (c == '\'') inStr = false }
-        else if (inTick) { if (c == '`') inTick = false }
-        else c match {
-          case '\'' => inStr = true
-          case '`' => inTick = true
-          case '(' => d += 1
-          case ')' => d -= 1; if (d == 0) return i
-          case _ =>
-        }
-        i += 1
-      }
-      -1
-    }
+  private def liftJoinSubqueries(q: String, joinKw: SqlLexer.CodeRegex): String = {
+    val asofAt = joinKw.findFirstIn(q).getOrElse(return q).start
     def mkView(sub: String): String = {
       val vn = s"__graft_asof_sub_${DialectWave2.viewCounter.incrementAndGet() & 63}"
       self.sql(sub).createOrReplaceTempView(vn)
@@ -511,13 +411,13 @@ private[engine] trait DialectWave2 { self: GraftSession =>
     var i = joinEnd
     while (i < out.length && Character.isWhitespace(out.charAt(i))) i += 1
     if (i < out.length && out.charAt(i) == '(') {
-      val close = matchForward(i)
+      val close = matchParen(out, i) - 1
       require(close > 0, "join subquery lift: unbalanced parenthesis in right side")
       val vn = mkView(out.substring(i + 1, close))
       out = out.substring(0, i) + vn + out.substring(close + 1)
     }
     // LEFT side: "… FROM (…) [AS] alias ASOF/ANY" — walk back over the alias
-    val asofAt2 = findKw(out).getOrElse(return out)
+    val asofAt2 = joinKw.findFirstIn(out).getOrElse(return out).start
     var j = asofAt2 - 1
     while (j >= 0 && Character.isWhitespace(out.charAt(j))) j -= 1
     val aliasEnd = j
@@ -531,26 +431,7 @@ private[engine] trait DialectWave2 { self: GraftSession =>
         (k - 2 < 0 || !Character.isLetterOrDigit(out.charAt(k - 2)))) k -= 2
     while (k >= 0 && Character.isWhitespace(out.charAt(k))) k -= 1
     if (hasAlias && k >= 0 && out.charAt(k) == ')') {
-      // find the '(' matching the ')' at k with one literal-aware forward
-      // scan (a reverse count would miscount parens inside string literals)
-      var open = -1
-      val stack = new java.util.ArrayDeque[Integer]()
-      var p = 0; var inStr = false; var inTick = false
-      while (p <= k) {
-        val c = out.charAt(p)
-        if (inStr) { if (c == '\'') inStr = false }
-        else if (inTick) { if (c == '`') inTick = false }
-        else c match {
-          case '\'' => inStr = true
-          case '`' => inTick = true
-          case '(' => stack.push(p)
-          case ')' =>
-            val o = if (stack.isEmpty) -1 else stack.pop().intValue
-            if (p == k) open = o
-          case _ =>
-        }
-        p += 1
-      }
+      val open = SqlLexer.openParenOf(out, k)
       require(open >= 0, "join subquery lift: unbalanced parenthesis in left side")
       val vn = mkView(out.substring(open + 1, k))
       out = out.substring(0, open) + vn + out.substring(k + 1)
@@ -558,7 +439,7 @@ private[engine] trait DialectWave2 { self: GraftSession =>
     out
   }
   private def rewriteAsofJoinOnce(q: String): String =
-    asofRe.findAllMatchIn(q).find(m => !inLiteralAt(q, m.start)) match {
+    asofRe.findFirstIn(q) match {
       case Some(m) =>
         val lName = unquoteIdent(m.group(1))
         val lAlias = {
@@ -621,7 +502,7 @@ private[engine] trait DialectWave2 { self: GraftSession =>
             }
           }
         }
-        val cmps = splitTopLevelWord(cond, "AND").map { c =>
+        val cmps = splitTopLevel(cond, "AND").map { c =>
           opRe.findFirstMatchIn(c) match {
             case Some(cm) =>
               val (s1, c1) = resolve(cm.group(1))
@@ -689,11 +570,10 @@ private[engine] trait DialectWave2 { self: GraftSession =>
         // if the statement still references `rAlias.<rightTs>`, expose the
         // match ts under a disambiguated name and rewrite those references
         // to it BEFORE the blanket qualifier re-homing.
-        val rtsRefRe = ("(?i)(?<![\\w.`])" + Regex.quote(rAlias) +
-          "\\s*\\.\\s*(`" + Regex.quote(rightTs) + "`|" + Regex.quote(rightTs) +
-          ")(?![\\w`])").r
-        val rtsReferenced = !exposeRts && rtsRefRe.findAllMatchIn(replaced0)
-          .exists(mm => !inLiteralAt(replaced0, mm.start))
+        val rtsRefRe = SqlLexer.regex("(?i)(?<![\\w.`])" + Regex.quote(rAlias) +
+          "\\s*\\.\\s*(`[^`]*`|\\w+)(?![\\w`])")
+        def isRts(mm: Regex.Match): Boolean = unquoteIdent(mm.group(1)).equalsIgnoreCase(rightTs)
+        val rtsReferenced = !exposeRts && rtsRefRe.findAllIn(replaced0).exists(isRts)
         val disamb = s"__asof_r_${rightTs.toLowerCase(Locale.ROOT)}"
         val (joined, replaced1) =
           if (exposeRts)
@@ -701,8 +581,7 @@ private[engine] trait DialectWave2 { self: GraftSession =>
           else if (rtsReferenced)
             (joined1.withColumnRenamed("__asof_match_ts", disamb),
               rtsRefRe.replaceAllIn(replaced0, mm =>
-                if (inLiteralAt(replaced0, mm.start)) qr(mm.matched)
-                else qr(s"`$disamb`")))
+                if (isRts(mm)) s"`$disamb`" else mm.matched))
           else (joined1.drop("__asof_match_ts"), replaced0)
 
         // rotating view-name pool: createOrReplaceTempView overwrites the
@@ -725,9 +604,9 @@ private[engine] trait DialectWave2 { self: GraftSession =>
     * another scope that reuses the alias name.
     */
   private def aliasBindings(q: String, alias: String): Int = {
-    val re = ("(?is)(?:\\bFROM\\s+[A-Za-z_`][\\w.`]*|\\bJOIN\\s+[A-Za-z_`]" +
-      "[\\w.`]*|\\))\\s+(?:AS\\s+)?" + Regex.quote(alias) + "\\b").r
-    re.findAllMatchIn(q).count(m => !inLiteralAt(q, m.start))
+    val re = SqlLexer.regex("(?is)(?:\\bFROM\\s+[A-Za-z_`][\\w.`]*|\\bJOIN\\s+[A-Za-z_`]" +
+      "[\\w.`]*|\\))\\s+(?:AS\\s+)?" + Regex.quote(alias) + "\\b")
+    re.findAllIn(q).size
   }
 
   /** Re-home `from.` qualifiers onto `to.` (the asof view carries both
@@ -735,11 +614,11 @@ private[engine] trait DialectWave2 { self: GraftSession =>
     * `t.from.x` chains are untouched.
     */
   private def mapQualifier(q: String, from: String, to: String): String = {
-    val re = ("(?i)(?<![\\w.`])" + Regex.quote(from) + "\\s*\\.").r
-    re.replaceAllIn(q, m => if (inLiteralAt(q, m.start)) qr(m.matched) else s"$to.")
+    val re = SqlLexer.regex("(?i)(?<![\\w.`])" + Regex.quote(from) + "\\s*\\.")
+    re.replaceAllIn(q, _ => s"$to.")
   }
 
-  private val identRe = "`[^`]+`|[A-Za-z_]\\w*".r
+  private val identRe = SqlLexer.regex("`[^`]+`|[A-Za-z_]\\w*")
 
   /** Lower-cased column-shaped identifiers in a scalar expression: bare or
     * backtick-quoted names that are not function calls (no following paren),
@@ -747,14 +626,16 @@ private[engine] trait DialectWave2 { self: GraftSession =>
     * Keywords fall out naturally — they never match a result column name.
     */
   private def exprColumnRefs(expr: String): Set[String] =
-    identRe.findAllMatchIn(expr).filter { m =>
-      !inLiteralAt(expr, m.start) &&
-        (m.start == 0 || expr.charAt(m.start - 1) != '.') && {
-          var j = m.end
-          while (j < expr.length && Character.isWhitespace(expr.charAt(j))) j += 1
-          !(j < expr.length && (expr.charAt(j) == '(' || expr.charAt(j) == '.'))
-        }
-    }.map(m => unquoteIdent(m.matched).toLowerCase(Locale.ROOT)).toSet
+    identRe.findAllIn(expr).filter(isColumnRef(expr, _))
+      .map(m => unquoteIdent(m.matched).toLowerCase(Locale.ROOT)).toSet
+
+  /** `m` is neither qualified, a qualifier, nor a called function. */
+  private def isColumnRef(expr: String, m: Regex.Match): Boolean =
+    (m.start == 0 || expr.charAt(m.start - 1) != '.') && {
+      var j = m.end
+      while (j < expr.length && Character.isWhitespace(expr.charAt(j))) j += 1
+      !(j < expr.length && (expr.charAt(j) == '(' || expr.charAt(j) == '.'))
+    }
 
   /** Replace each reference to a column in `cols` (lower-cased names) with
     * `lag(col) <lagW>` — turning "expr over this row" into "expr over the
@@ -770,15 +651,8 @@ private[engine] trait DialectWave2 { self: GraftSession =>
   private def rewriteExprRefsTo(expr: String, cols: Set[String],
       f: String => String): String =
     identRe.replaceAllIn(expr, m => {
-      val isRef = !inLiteralAt(expr, m.start) &&
-        (m.start == 0 || expr.charAt(m.start - 1) != '.') && {
-          var j = m.end
-          while (j < expr.length && Character.isWhitespace(expr.charAt(j))) j += 1
-          !(j < expr.length && (expr.charAt(j) == '(' || expr.charAt(j) == '.'))
-        }
       val u = unquoteIdent(m.matched)
-      if (isRef && cols(u.toLowerCase(Locale.ROOT)))
-        qr(f(u)) else qr(m.matched)
+      if (isColumnRef(expr, m) && cols(u.toLowerCase(Locale.ROOT))) f(u) else m.matched
     })
 
   // ---- scalar WITH (ClickHouse CTE extension) -------------------------------
@@ -815,26 +689,7 @@ private[engine] trait DialectWave2 { self: GraftSession =>
       if (stdCteRe.pattern.matcher(e).matches()) kept += e.trim
       else {
         // the LAST top-level AS splits expr from the alias ident
-        val u = e.toUpperCase(Locale.ROOT)
-        var d = 0; var i = 0; var inStr = false; var inTick = false
-        var lastAs = -1
-        while (i < e.length - 1) {
-          val c = e.charAt(i)
-          if (inStr) { if (c == '\'') inStr = false }
-          else if (inTick) { if (c == '`') inTick = false }
-          else c match {
-            case '\'' => inStr = true
-            case '`' => inTick = true
-            case '(' => d += 1
-            case ')' => d -= 1
-            case _ =>
-              if (d == 0 && u.startsWith("AS", i) &&
-                  (i == 0 || !Character.isLetterOrDigit(u.charAt(i - 1)) && u.charAt(i - 1) != '_') &&
-                  (i + 2 >= u.length || !Character.isLetterOrDigit(u.charAt(i + 2)) && u.charAt(i + 2) != '_'))
-                lastAs = i
-          }
-          i += 1
-        }
+        val lastAs = SqlLexer.lastTopLevelKeyword(e, "AS")
         require(lastAs > 0, s"WITH: cannot parse entry '$e' — expected " +
           "`expr AS ident` (ClickHouse scalar alias) or `ident AS (subquery)`")
         val ident = e.substring(lastAs + 2).trim
@@ -861,22 +716,20 @@ private[engine] trait DialectWave2 { self: GraftSession =>
   }
 
   /** Replace unqualified, non-call, non-alias-position references to
-    * `ident` with `(expr)` — word-anchored and literal-aware.
+    * `ident` (bare or backtick-quoted) with `(expr)`.
     */
-  private def inlineIdent(text: String, ident: String, expr: String): String = {
-    val re = ("(?i)(?<![\\w.`])(?:" + Regex.quote(ident) + "|`" +
-      Regex.quote(ident) + "`)(?![\\w`])").r
-    re.replaceAllIn(text, mm => {
-      val before = text.substring(0, mm.start)
+  private val nameRe = SqlLexer.regex("(?<![\\w.`])(`[^`]*`|\\w+)(?![\\w`])")
+  private def inlineIdent(text: String, ident: String, expr: String): String =
+    nameRe.replaceAllIn(text, mm => {
+      val named = mm.matched.equalsIgnoreCase(ident) || mm.matched.equalsIgnoreCase(s"`$ident`")
       // alias-definition position: immediately preceded by AS
-      val isAliasDef = "(?is).*\\bAS\\s*$".r.pattern.matcher(before).matches()
+      lazy val isAliasDef =
+        "(?is).*\\bAS\\s*$".r.pattern.matcher(text.substring(0, mm.start)).matches()
       var j = mm.end
       while (j < text.length && Character.isWhitespace(text.charAt(j))) j += 1
       val isCall = j < text.length && text.charAt(j) == '('
-      if (inLiteralAt(text, mm.start) || isAliasDef || isCall) qr(mm.matched)
-      else qr(s"($expr)")
+      if (named && !isCall && !isAliasDef) s"($expr)" else mm.matched
     })
-  }
 
   // ---- GROUP BY … WITH TOTALS ---------------------------------------------
   // ClickHouse's extra grand-total row → ANSI `GROUPING SETS ((keys), ())`.
@@ -888,13 +741,12 @@ private[engine] trait DialectWave2 { self: GraftSession =>
   // span — a lazy (.+?) anchored on the leftmost GROUP BY would latch onto
   // a subquery's inner GROUP BY and consume (and so never rewrite) the
   // real outer clause.
-  private val totalsWordRe = "(?i)\\bWITH\\s+TOTALS\\b".r
-  private val groupByRe = "(?i)\\bGROUP\\s+BY\\b".r
+  private val totalsWordRe = SqlLexer.regex("(?i)\\bWITH\\s+TOTALS\\b")
+  private val groupByRe = SqlLexer.regex("(?i)\\bGROUP\\s+BY\\b")
   private[engine] def rewriteWithTotals(q: String): String =
-    totalsWordRe.findAllMatchIn(q).find(m => !inLiteralAt(q, m.start)) match {
+    totalsWordRe.findFirstIn(q) match {
       case Some(m) =>
-        val gb = groupByRe.findAllMatchIn(q.substring(0, m.start)).toSeq
-          .filter(g => !inLiteralAt(q, g.start))
+        val gb = groupByRe.findAllIn(q.substring(0, m.start)).toSeq
           .reverse.find(g => parenBalanced(q.substring(g.end, m.start)))
           .getOrElse(throw new IllegalArgumentException(
             "WITH TOTALS without a matching GROUP BY"))
@@ -954,19 +806,18 @@ private[engine] trait DialectWave2 { self: GraftSession =>
   // co-partitioned with the keys, gap rows carrying the group's values
   // (ClickHouse copies the prefix from the previous row — identical within
   // a sorted group), and prefix-PARTITIONed interpolation windows.
-  private val fillRe =
-    ("(?is)^(.*\\S)\\s+ORDER\\s+BY\\s+" +
+  private val fillRe = SqlLexer.regex(
+    "(?is)^(.*\\S)\\s+ORDER\\s+BY\\s+" +
       "((?:(?:[A-Za-z_]\\w*|`[^`]+`)(?:\\s+(?:ASC|DESC))?\\s*,\\s*)*)" +
       "([A-Za-z_]\\w*|`[^`]+`)(\\s+(?:ASC|DESC))?" +
       "\\s+WITH\\s+FILL" +
       "(\\s+FROM\\s+(-?\\d+|DATE\\s+'[^']+'|TIMESTAMP\\s+'[^']+'))?" +
       "(\\s+TO\\s+(-?\\d+|DATE\\s+'[^']+'|TIMESTAMP\\s+'[^']+'))?" +
       "(\\s+STEP\\s+(-?\\d+|INTERVAL\\s+\\d+\\s+[A-Za-z]+))?" +
-      "(\\s+INTERPOLATE\\s*\\((.*)\\))?\\s*;?\\s*$").r
+      "(\\s+INTERPOLATE\\s*\\((.*)\\))?\\s*;?\\s*$")
   private[engine] def rewriteWithFill(q: String): String =
-    fillRe.findFirstMatchIn(q) match {
-      case Some(m) if parenBalanced(m.group(1)) &&
-          !inLiteralAt(q, q.toUpperCase(Locale.ROOT).lastIndexOf("WITH FILL")) =>
+    fillRe.findFirstIn(q) match {
+      case Some(m) if parenBalanced(m.group(1)) =>
         val base = m.group(1)
         val fcName = unquoteIdent(m.group(3))
         val schema = probeSchema(s"( $base ) __graft_fill_probe")
@@ -1313,9 +1164,7 @@ private[engine] trait DialectWave2 { self: GraftSession =>
               s"SELECT $outer FROM __graft_fill_k2\n$ordTail"
         }
       case _ =>
-        val at = q.toUpperCase(Locale.ROOT).indexOf("WITH FILL")
-        if (at >= 0 && !inLiteralAt(q, at) &&
-            q.substring(at).matches("(?is)WITH\\s+FILL\\b.*")) {
+        if (withFillRe.findFirstIn(q).isDefined) {
           rewriteExprFill(q).foreach(return _)
           throw new UnsupportedOperationException(
             "WITH FILL is supported as a trailing `ORDER BY [key, …,] " +
@@ -1341,7 +1190,7 @@ private[engine] trait DialectWave2 { self: GraftSession =>
     * SELECT column. Scope: a single expression (no leading sort columns).
     */
   private def rewriteExprFill(q: String): Option[String] = {
-    val m = exprFillRe.findFirstMatchIn(q).getOrElse(return None)
+    val m = exprFillRe.findFirstIn(q).getOrElse(return None)
     if (!parenBalanced(m.group(1))) return None
     var expr = m.group(2).trim
     var dir = ""
@@ -1364,7 +1213,8 @@ private[engine] trait DialectWave2 { self: GraftSession =>
   }
 
   private val exprFillRe =
-    "(?is)^(.*\\S)\\s+ORDER\\s+BY\\s+(.+?)\\s+WITH\\s+FILL(.*)$".r
+    SqlLexer.regex("(?is)^(.*\\S)\\s+ORDER\\s+BY\\s+(.+?)\\s+WITH\\s+FILL(.*)$")
+  private val withFillRe = SqlLexer.regex("(?i)\\bWITH\\s+FILL\\b")
 
   // ---- SELECT * REPLACE(…) / * [EXCEPT(…)] APPLY(fn) ------------------------
   // ClickHouse column-transformer modifiers on the star (SELECT grammar:
@@ -1397,47 +1247,18 @@ private[engine] trait DialectWave2 { self: GraftSession =>
     * `replacement`, skipping string/backtick literals and dotted refs
     * (`t.v` is a qualified column, not the lambda variable).
     */
-  private def substIdent(body: String, v: String, replacement: String): String = {
-    def isW(c: Char): Boolean = Character.isLetterOrDigit(c) || c == '_'
-    val sb = new StringBuilder
-    var i = 0; var inStr = false; var inTick = false
-    while (i < body.length) {
-      val c = body.charAt(i)
-      if (inStr) { sb += c; if (c == '\'') inStr = false; i += 1 }
-      else if (inTick) { sb += c; if (c == '`') inTick = false; i += 1 }
-      else if (c == '\'') { sb += c; inStr = true; i += 1 }
-      else if (c == '`') { sb += c; inTick = true; i += 1 }
-      else if (isW(c) &&
-          (i == 0 || (!isW(body.charAt(i - 1)) && body.charAt(i - 1) != '.')) &&
-          body.regionMatches(false, i, v, 0, v.length) &&
-          (i + v.length >= body.length || !isW(body.charAt(i + v.length)))) {
-        sb ++= replacement; i += v.length
-      } else { sb += c; i += 1 }
-    }
-    sb.toString
-  }
+  private def substIdent(body: String, v: String, replacement: String): String =
+    SqlLexer.regex("(?<![\\w.])" + Regex.quote(v) + "(?!\\w)").replaceAllIn(body, _ => replacement)
 
   private[engine] def rewriteStarModifiers(q: String): String = {
-    var i = 0; var inStr = false; var inTick = false
-    while (i < q.length) {
-      val c = q.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else if (inTick) { if (c == '`') inTick = false }
-      else if (c == '\'') inStr = true
-      else if (c == '`') inTick = true
-      else if (c == '*' && isSelectStarAt(q, i)) {
-        parseStarMods(q, i) match {
-          case Some(sm) => return rewriteStarModifiers(applyStarMods(q, i, sm))
-          case None =>
-        }
-      }
-      else if ((c == 'C' || c == 'c') && isSelectStarAt(q, i)) {
-        parseColumnsSelector(q, i) match {
-          case Some(sm) => return rewriteStarModifiers(applyStarMods(q, i, sm))
-          case None =>
-        }
-      }
-      i += 1
+    val code = SqlLexer.mask(q)
+    code.indices.foreach { i =>
+      val c = code.charAt(i)
+      val mods =
+        if (c == '*' && isSelectStarAt(q, i)) parseStarMods(q, i)
+        else if ((c == 'C' || c == 'c') && isSelectStarAt(q, i)) parseColumnsSelector(q, i)
+        else None
+      mods.foreach(sm => return rewriteStarModifiers(applyStarMods(q, i, sm)))
     }
     q
   }
@@ -1488,25 +1309,6 @@ private[engine] trait DialectWave2 { self: GraftSession =>
     }
   }
 
-  /** End index (exclusive) of the balanced paren group opening at `open`. */
-  private def matchParen(q: String, open: Int): Int = {
-    var d = 0; var i = open; var inStr = false; var inTick = false
-    while (i < q.length) {
-      val c = q.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else if (inTick) { if (c == '`') inTick = false }
-      else c match {
-        case '\'' => inStr = true
-        case '`' => inTick = true
-        case '(' => d += 1
-        case ')' => d -= 1; if (d == 0) return i + 1
-        case _ =>
-      }
-      i += 1
-    }
-    -1
-  }
-
   /** `requireTransform = false` (the COLUMNS path) returns the parsed mods
     * even when the tail is empty or EXCEPT-only — COLUMNS must always be
     * expanded, while a bare `* EXCEPT` stays on Spark's native form.
@@ -1540,9 +1342,8 @@ private[engine] trait DialectWave2 { self: GraftSession =>
     if (wordAt(i, "REPLACE")) {
       group(i + 7) match {
         case Some((content, e)) =>
-          val aliasRe = "(?is)^(.+?)\\s+AS\\s+([A-Za-z_]\\w*|`[^`]+`)\\s*$".r
           val items = splitTopLevel(content).map { it =>
-            aliasRe.findFirstMatchIn(it).map(x => (x.group(1).trim, unquoteIdent(x.group(2))))
+            trailingAliasRe.findFirstIn(it).map(x => (x.group(1).trim, unquoteIdent(x.group(2))))
           }
           if (items.exists(_.isEmpty)) return None // not `expr AS col` — not a transformer
           replaces = items.flatten

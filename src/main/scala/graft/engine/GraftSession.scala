@@ -18,22 +18,30 @@ import graft.functions.GraftFunctions
   *     (the reference's `file()` table function, table_functions.py:123-207)
   */
 final class GraftSession(val spark: SparkSession) extends DialectWave2 {
+  import SqlLexer.{clauseExtent, parenBalanced, splitTopLevel, topLevelKeyword}
+
   GraftFunctions.register(spark)
 
-  /** Raw SQL entry point (ClickHouse-alias dialect accepted).
+  /** Raw SQL entry point (ClickHouse dialect accepted).
     *
-    * One textual rewrite is required before parsing: Spark's parser owns
-    * DATEDIFF/DATE_DIFF/TIMESTAMPDIFF(unit, …) at the grammar level and
-    * rejects ClickHouse's quoted-unit form, so dateDiff('day', a, b) is
-    * rewritten onto the registry-resolved dateDiffCH (boundary-crossing
-    * semantics, GraftFunctions). Everything else is plain function aliasing.
+    * Comments are stripped once, before the statement is routed, and every
+    * dialect rewrite matches on [[SqlLexer]]'s code mask: no rewrite sees a
+    * comment or matches inside a literal. The one exception is the data
+    * payload after `INSERT … FORMAT <fmt>`, which is never lexed.
     */
   def sql(query: String): DataFrame = {
-    val u = query.toUpperCase(java.util.Locale.ROOT)
-    if (u.contains("INTO OUTFILE")) outfileRe.findFirstMatchIn(query) match {
-      case Some(m) if !inLiteralAt(query, m.start + m.group(1).length + 1) =>
-        return writeOutfile(m.group(1), m.group(2), Option(m.group(4)))
+    query.substring(SqlLexer.codeStart(query)) match {
+      // chdb's inline-data INSERT (r17): `INSERT INTO t [(cols)] FORMAT
+      // JSONEachRow/CSV/… <data>` — ClickHouse reads the DATA from the
+      // statement text after the format name, and chdb.query() ports that
+      // verbatim. VALUES/SELECT inserts fall through to Spark's parser.
+      case insertFormatRe(tbl, _, colList, fmt, payload) =>
+        return insertInline(tbl, Option(colList), fmt, payload)
       case _ =>
+    }
+    val q = SqlLexer.stripComments(query)
+    outfileRe.findFirstIn(q).foreach { m =>
+      return writeOutfile(m.group(1), m.group(2), Option(m.group(4)))
     }
     // mutation statements (r17): ClickHouse's ALTER TABLE … UPDATE/DELETE
     // spellings (the reference's engine-native mutations) and the ANSI
@@ -41,39 +49,39 @@ final class GraftSession(val spark: SparkSession) extends DialectWave2 {
     // copy-on-write for [[registerDelta]] tables, capability-gated
     // passthrough otherwise. Mutations return an empty frame (ClickHouse
     // returns no rows; the observable effect is the table's new state).
-    val trimmedU = u.trim
-    if (trimmedU.startsWith("ALTER TABLE")) query match {
+    val trimmedU = q.trim.toUpperCase(java.util.Locale.ROOT)
+    if (trimmedU.startsWith("ALTER TABLE")) q match {
       case alterUpdateRe(tbl, setList, where) =>
         updateSet(tbl, parseSetList(setList), where); return emptyResult
       case alterDeleteRe(tbl, where) =>
         deleteRows(tbl, where); return emptyResult
       case _ => // other ALTERs (ADD COLUMN …) fall through to Spark
     }
-    else if (trimmedU.startsWith("UPDATE")) query match {
+    else if (trimmedU.startsWith("UPDATE")) q match {
       case sqlUpdateRe(tbl, setList, where) if deltaTables.contains(tbl) =>
         updateSet(tbl, parseSetList(setList), where); return emptyResult
       case _ =>
     }
-    else if (trimmedU.startsWith("DELETE")) query match {
+    else if (trimmedU.startsWith("DELETE")) q match {
       case sqlDeleteRe(tbl, where) if deltaTables.contains(tbl) =>
         deleteRows(tbl, where); return emptyResult
       case _ =>
     }
-    else if (trimmedU.startsWith("OPTIMIZE")) query match {
+    else if (trimmedU.startsWith("OPTIMIZE")) q match {
       // ClickHouse `OPTIMIZE TABLE t [FINAL]` = merge parts → Delta compact
       case optimizeRe(tbl) if deltaTables.contains(tbl) =>
         graft.io.DeltaNative.optimizeCompact(spark, deltaTables(tbl))
         refreshDelta(tbl); return emptyResult
       case _ =>
     }
-    else if (trimmedU.startsWith("TRUNCATE")) query match {
+    else if (trimmedU.startsWith("TRUNCATE")) q match {
       // ClickHouse `TRUNCATE TABLE t` → delete-all CoW for registered
       // Delta tables (Spark's native TRUNCATE serves catalog tables)
       case truncateRe(tbl) if deltaTables.contains(tbl) =>
         deleteRows(tbl, "true"); return emptyResult
       case _ =>
     }
-    else if (trimmedU.startsWith("RENAME")) query match {
+    else if (trimmedU.startsWith("RENAME")) q match {
       // ClickHouse `RENAME TABLE a TO b[, c TO d…]` (r18): catalog tables
       // route to Spark's ALTER TABLE RENAME; temp views (this engine's
       // common registration surface) are re-registered under the new name
@@ -97,7 +105,7 @@ final class GraftSession(val spark: SparkSession) extends DialectWave2 {
         return emptyResult
       case _ =>
     }
-    else if (trimmedU.startsWith("EXISTS")) query match {
+    else if (trimmedU.startsWith("EXISTS")) q match {
       // ClickHouse `EXISTS [TABLE] t` → one row, UInt8-ish 0/1
       case existsTableRe(tbl) =>
         val r = if (spark.catalog.tableExists(tbl)) 1 else 0
@@ -111,7 +119,7 @@ final class GraftSession(val spark: SparkSession) extends DialectWave2 {
       // rewriter. Plain DESCRIBE <table> stays on Spark's native path.
       val descFnRe =
         "(?is)^\\s*DESC(?:RIBE)?\\s+(?:TABLE\\s+)?([A-Za-z_]\\w*\\s*\\(.+\\))\\s*;?\\s*$".r
-      query match {
+      q match {
         case descFnRe(fn) =>
           import org.apache.spark.sql.types.{BooleanType, StringType, StructField, StructType}
           val fields = spark.sql(rewriteDialect(s"SELECT * FROM $fn LIMIT 0"))
@@ -139,7 +147,7 @@ final class GraftSession(val spark: SparkSession) extends DialectWave2 {
       val synRe = "(?is)^\\s*EXPLAIN\\s+SYNTAX\\s+(.+)$".r
       val anyRe = ("(?is)^\\s*EXPLAIN" +
         "(\\s+(?:PIPELINE|PLAN|AST|EXTENDED|FORMATTED|CODEGEN|COST))?\\s+(.+)$").r
-      query match {
+      q match {
         case synRe(inner) =>
           import spark.implicits._
           return rewriteDialect(inner).linesIterator.toSeq.toDF("explain")
@@ -155,16 +163,7 @@ final class GraftSession(val spark: SparkSession) extends DialectWave2 {
         case _ =>
       }
     }
-    else if (trimmedU.startsWith("INSERT")) query match {
-      // chdb's inline-data INSERT (r17): `INSERT INTO t [(cols)] FORMAT
-      // JSONEachRow/CSV/… <data>` — ClickHouse reads the DATA from the
-      // statement text after the format name, and chdb.query() ports that
-      // verbatim. VALUES/SELECT inserts fall through to Spark's parser.
-      case insertFormatRe(tbl, _, colList, fmt, payload) =>
-        return insertInline(tbl, Option(colList), fmt, payload)
-      case _ =>
-    }
-    spark.sql(rewriteDialect(query))
+    spark.sql(rewriteDialect(q))
   }
 
   private val insertFormatRe =
@@ -304,14 +303,14 @@ final class GraftSession(val spark: SparkSession) extends DialectWave2 {
   private val truncateRe =
     "(?is)^\\s*TRUNCATE\\s+TABLE\\s+([A-Za-z_][\\w.]*)\\s*;?\\s*$".r
 
-  private val alterUpdateRe =
-    "(?is)^\\s*ALTER\\s+TABLE\\s+([A-Za-z_][\\w.]*)\\s+UPDATE\\s+(.+?)\\s+WHERE\\s+(.+?)\\s*;?\\s*$".r
-  private val alterDeleteRe =
-    "(?is)^\\s*ALTER\\s+TABLE\\s+([A-Za-z_][\\w.]*)\\s+DELETE\\s+WHERE\\s+(.+?)\\s*;?\\s*$".r
-  private val sqlUpdateRe =
-    "(?is)^\\s*UPDATE\\s+([A-Za-z_][\\w.]*)\\s+SET\\s+(.+?)\\s+WHERE\\s+(.+?)\\s*;?\\s*$".r
-  private val sqlDeleteRe =
-    "(?is)^\\s*DELETE\\s+FROM\\s+([A-Za-z_][\\w.]*)\\s+WHERE\\s+(.+?)\\s*;?\\s*$".r
+  private val alterUpdateRe = SqlLexer.regex(
+    "(?is)^\\s*ALTER\\s+TABLE\\s+([A-Za-z_][\\w.]*)\\s+UPDATE\\s+(.+?)\\s+WHERE\\s+(.+?)\\s*;?\\s*$")
+  private val alterDeleteRe = SqlLexer.regex(
+    "(?is)^\\s*ALTER\\s+TABLE\\s+([A-Za-z_][\\w.]*)\\s+DELETE\\s+WHERE\\s+(.+?)\\s*;?\\s*$")
+  private val sqlUpdateRe = SqlLexer.regex(
+    "(?is)^\\s*UPDATE\\s+([A-Za-z_][\\w.]*)\\s+SET\\s+(.+?)\\s+WHERE\\s+(.+?)\\s*;?\\s*$")
+  private val sqlDeleteRe = SqlLexer.regex(
+    "(?is)^\\s*DELETE\\s+FROM\\s+([A-Za-z_][\\w.]*)\\s+WHERE\\s+(.+?)\\s*;?\\s*$")
 
   private def emptyResult: DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -322,24 +321,7 @@ final class GraftSession(val spark: SparkSession) extends DialectWave2 {
     */
   private def parseSetList(setList: String): Map[String, String] =
     splitTopLevel(setList).map { a =>
-      val i = {
-        var d = 0; var j = 0; var inStr = false; var inTick = false; var eq = -1
-        while (j < a.length && eq < 0) {
-          val c = a.charAt(j)
-          if (inStr) { if (c == '\'') inStr = false }
-          else if (inTick) { if (c == '`') inTick = false }
-          else c match {
-            case '\'' => inStr = true
-            case '`' => inTick = true
-            case '(' => d += 1
-            case ')' => d -= 1
-            case '=' if d == 0 => eq = j
-            case _ =>
-          }
-          j += 1
-        }
-        eq
-      }
+      val i = topLevelKeyword(a, "=")
       require(i > 0, s"cannot parse assignment '$a' — expected col = expr")
       a.substring(0, i).trim -> a.substring(i + 1).trim
     }.toMap
@@ -354,9 +336,9 @@ final class GraftSession(val spark: SparkSession) extends DialectWave2 {
   // `sql(query).write` instead. Divergence: ClickHouse returns an empty
   // result set (the client prints the count); we return one row
   // (file, bytes_written) so the operation is observable from the API.
-  private val outfileRe =
-    ("(?is)^(.*\\S)\\s+INTO\\s+OUTFILE\\s+'([^']+)'" +
-      "(\\s+FORMAT\\s+([A-Za-z][A-Za-z0-9]*))?\\s*;?\\s*$").r
+  private val outfileRe = SqlLexer.regex(
+    "(?is)^(.*\\S)\\s+INTO\\s+OUTFILE\\s+'([^']+)'" +
+      "(\\s+FORMAT\\s+([A-Za-z][A-Za-z0-9]*))?\\s*;?\\s*$")
 
   private def writeOutfile(inner: String, path: String,
       fmtOpt: Option[String]): DataFrame = {
@@ -388,14 +370,14 @@ final class GraftSession(val spark: SparkSession) extends DialectWave2 {
   // file()/url() are resolved at rewrite time into session temp views (one
   // per distinct (path, format), cached by name) so the standard reader
   // handles headers/inference; numbers(N) rewrites onto Spark's range() TVF.
-  // All call forms resolve through ONE quote/comment-aware scanner
-  // ([[rewriteCallSites]], r12) — a fn name inside a string literal or
-  // comment is never rewritten, and args parse with full quoting rules.
+  // All call forms resolve through [[rewriteCallSites]] — a fn name inside
+  // a string literal is never rewritten, and args split with full quoting
+  // rules.
   // numbers/numbers_mt accept integer or scientific-notation counts (the
   // reference README uses numbers_mt(1e10)); system.numbers is the
   // unbounded generator capped at 2^33 rows — LIMIT pushdown stops
   // generation.
-  private val systemNumbers = "(?i)\\bsystem\\.numbers\\b".r
+  private val systemNumbers = SqlLexer.regex("(?i)\\bsystem\\.numbers\\b")
 
   /** CH type name → Sources.generateRandom column kind. */
   private def randKind(t: String): String = t.toLowerCase match {
@@ -528,66 +510,6 @@ final class GraftSession(val spark: SparkSession) extends DialectWave2 {
     java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
 
-  /** Index just past the quoted literal starting at `start`
-    * (`raw(start)` ∈ {' " `}); honors backslash escapes and doubled
-    * closing quotes (`''`), Spark's two string-escape conventions.
-    */
-  private def quotedEnd(raw: String, start: Int): Int = {
-    val quote = raw.charAt(start)
-    var i = start + 1
-    while (i < raw.length) {
-      val c = raw.charAt(i)
-      if (c == '\\' && quote != '`') i += 2
-      else if (c == quote) {
-        if (i + 1 < raw.length && raw.charAt(i + 1) == quote) i += 2
-        else return i + 1
-      } else i += 1
-    }
-    raw.length // unterminated — surface through Spark's parser downstream
-  }
-
-  /** Index of the ')' matching the '(' at `open`, quote- and nesting-aware. */
-  private def matchingParen(raw: String, open: Int): Int = {
-    var depth = 0
-    var i = open
-    while (i < raw.length) {
-      raw.charAt(i) match {
-        case '\'' | '"' | '`' => i = quotedEnd(raw, i) - 1
-        case '(' => depth += 1
-        case ')' => depth -= 1; if (depth == 0) return i
-        case _ =>
-      }
-      i += 1
-    }
-    throw new IllegalArgumentException(
-      "unbalanced parentheses in table-function call near: " +
-        raw.substring(open).take(80))
-  }
-
-  /** Split an argument span on TOP-LEVEL commas only — commas inside
-    * quoted strings or nested parentheses do not split (a column literal
-    * like 'a,b' stays one argument).
-    */
-  private def splitArgs(raw: String): IndexedSeq[String] = {
-    val out = Vector.newBuilder[String]
-    var start = 0
-    var depth = 0
-    var i = 0
-    while (i < raw.length) {
-      raw.charAt(i) match {
-        case '\'' | '"' | '`' => i = quotedEnd(raw, i) - 1
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case ',' if depth == 0 =>
-          out += raw.substring(start, i); start = i + 1
-        case _ =>
-      }
-      i += 1
-    }
-    out += raw.substring(start)
-    out.result().map(_.trim).filter(_.nonEmpty)
-  }
-
   /** Strip one level of ' or " quoting and undo the \x / doubled-quote
     * escapes; bare tokens (table names, numbers) pass through.
     */
@@ -603,56 +525,35 @@ final class GraftSession(val spark: SparkSession) extends DialectWave2 {
     "mysql", "postgresql", "sqlite", "jdbc", "remote", "remotesecure",
     "redis", "mongodb", "s3", "gcs", "hdfs", "azureblobstorage")
 
-  /** Rewrite ALL table-function call sites by SCANNING, not regex: string
-    * literals, back-quoted identifiers and comments are copied verbatim
-    * (a fn name inside a literal is never rewritten), the argument span is
-    * the full balanced-paren extent, and nested pipeline calls in argument
-    * position are resolved inner-first — so
-    * `token_count(dedup_exact(t, 'k', 'id'), 'text')` composes. A call
-    * whose SHAPE doesn't match the table-function grammar (e.g. `file(x)`
-    * with an unquoted first arg) is left verbatim for Spark to resolve,
-    * exactly like the r11 regexes' non-matches — but its argument span
-    * still gets scanned, so rewritable calls nested inside arbitrary
-    * expressions are found. Replaces the r11 per-function regex passes,
-    * which split quoted commas in half, rewrote inside literals, and could
-    * not see nested calls.
+  /** Rewrite ALL table-function call sites: a head is a table-function
+    * name followed by '(' on the code mask (a name inside a literal or
+    * comment is never rewritten), the argument span is the full
+    * balanced-paren extent, and nested pipeline calls in argument position
+    * are resolved inner-first — so `token_count(dedup_exact(t, 'k', 'id'),
+    * 'text')` composes. A call whose SHAPE doesn't match the table-function
+    * grammar (e.g. `file(x)` with an unquoted first arg) is left verbatim
+    * for Spark to resolve, but its argument span is still searched, so
+    * rewritable calls nested inside arbitrary expressions are found.
     */
+  private val callHeadRe = SqlLexer.regex("(?<![\\w.$`\"])([A-Za-z_]\\w*)\\s*\\(")
   private def rewriteCallSites(q: String): String = {
-    val sb = new StringBuilder
-    val n = q.length
-    var i = 0
-    while (i < n) {
-      val c = q.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') {
-        val e = quotedEnd(q, i); sb.append(q.substring(i, e)); i = e
-      } else if (c == '-' && i + 1 < n && q.charAt(i + 1) == '-') {
-        val nl = q.indexOf('\n', i)
-        val e = if (nl < 0) n else nl + 1
-        sb.append(q.substring(i, e)); i = e
-      } else if (c == '/' && i + 1 < n && q.charAt(i + 1) == '*') {
-        val cl = q.indexOf("*/", i + 2)
-        val e = if (cl < 0) n else cl + 2
-        sb.append(q.substring(i, e)); i = e
-      } else if (Character.isJavaIdentifierStart(c)) {
-        var e = i + 1
-        while (e < n && Character.isJavaIdentifierPart(q.charAt(e))) e += 1
-        val word = q.substring(i, e)
-        val lw = word.toLowerCase
-        val qualified = i > 0 && q.charAt(i - 1) == '.'
-        var p = e
-        while (p < n && Character.isWhitespace(q.charAt(p))) p += 1
-        val isHead = !qualified && p < n && q.charAt(p) == '(' &&
-          (pipelineFnSet.contains(lw) || sourceHeads.contains(lw))
-        val replaced = if (isHead) {
-          val close = matchingParen(q, p)
-          rewriteCall(word, lw, q.substring(p + 1, close)).map { repl =>
-            sb.append(repl); i = close + 1
-          }.isDefined
-        } else false
-        if (!replaced) { sb.append(word); i = e }
-      } else { sb.append(c); i += 1 }
+    val sb = new java.lang.StringBuilder
+    var at = 0
+    callHeadRe.findAllIn(q).filter(_.start >= at).foreach { m =>
+      val word = m.group(1)
+      val lw = word.toLowerCase
+      if (pipelineFnSet.contains(lw) || sourceHeads.contains(lw)) {
+        val open = m.end - 1
+        val close = SqlLexer.matchParen(q, open) - 1
+        if (close < 0) throw new IllegalArgumentException(
+          "unbalanced parentheses in table-function call near: " +
+            q.substring(open).take(80))
+        rewriteCall(word, lw, q.substring(open + 1, close)).foreach { repl =>
+          sb.append(q, at, m.start).append(repl); at = close + 1
+        }
+      }
     }
-    sb.toString
+    sb.append(q, at, q.length).toString
   }
 
   /** One call site → its replacement text, or None when the argument shape
@@ -661,7 +562,7 @@ final class GraftSession(val spark: SparkSession) extends DialectWave2 {
   private def rewriteCall(word: String, lw: String, raw: String): Option[String] = {
     def quotedTok(s: String): Boolean =
       s.length >= 2 && (s.head == '\'' || s.head == '"') && s.last == s.head
-    val args = splitArgs(raw)
+    val args = splitTopLevel(raw)
     lw match {
       case fn if pipelineFnSet.contains(fn) =>
         Some(pipelineView(word, rewriteCallSites(raw)))
@@ -851,7 +752,7 @@ final class GraftSession(val spark: SparkSession) extends DialectWave2 {
   private def pipelineView(fn: String, rawArgs: String): String = {
     val f = fn.toLowerCase
     val (usage, maxArity) = pipelineSig(f)
-    val args = splitArgs(rawArgs)
+    val args = splitTopLevel(rawArgs)
     if (args.length > maxArity)
       throw new IllegalArgumentException(
         s"$f: ${args.length} arguments, at most $maxArity accepted — usage: $usage")
@@ -973,7 +874,7 @@ final class GraftSession(val spark: SparkSession) extends DialectWave2 {
 
   private[engine] def rewriteTableFns(q: String): String =
     systemNumbers.replaceAllIn(rewriteSystemTables(rewriteCallSites(q)),
-      "(SELECT id AS number FROM range(8589934592))")
+      _ => "(SELECT id AS number FROM range(8589934592))")
 
   // ---- system.* introspection tables (r17) ----------------------------------
   // ClickHouse's catalog views a drop-in user queries for introspection
@@ -983,58 +884,57 @@ final class GraftSession(val spark: SparkSession) extends DialectWave2 {
   // system.tables/columns reflect the Spark catalog's current database;
   // system.functions lists every name the dialect registry resolves.
   private val systemTableRe =
-    "(?i)\\bsystem\\.(one|tables|columns|databases|functions)\\b".r
+    SqlLexer.regex("(?i)\\bsystem\\.(one|tables|columns|databases|functions)\\b")
   private[engine] def rewriteSystemTables(q: String): String =
     systemTableRe.replaceAllIn(q, m => {
-      if (inLiteralAt(q, m.start))
-        scala.util.matching.Regex.quoteReplacement(m.matched)
-      else {
-        val which = m.group(1).toLowerCase(java.util.Locale.ROOT)
-        val vn = s"__graft_system_$which"
-        import spark.implicits._
-        val df = which match {
-          case "one" => Seq(0.toByte).toDF("dummy")
-          case "databases" =>
-            spark.catalog.listDatabases().collect().toSeq.map(_.name)
-              .toDF("name")
-          case "tables" =>
-            val db = spark.catalog.currentDatabase
-            spark.catalog.listTables().collect().toSeq
-              .map(t => (Option(t.database).getOrElse(db), t.name,
-                if (t.isTemporary) "View" else t.tableType))
-              .toDF("database", "name", "engine")
-          case "columns" =>
-            val db = spark.catalog.currentDatabase
-            spark.catalog.listTables().collect().toSeq.flatMap { t =>
-              try spark.catalog.listColumns(t.name).collect().toSeq
-                .zipWithIndex.map { case (c, i) =>
-                  (Option(t.database).getOrElse(db), t.name, c.name,
-                    c.dataType, (i + 1).toLong)
-                }
-              catch { case _: Exception => Seq.empty }
-            }.toDF("database", "table", "name", "type", "position")
-          case "functions" =>
-            // every resolvable name: Spark built-ins + the dialect registry
-            // (column subset of CH's system.functions — name only)
-            spark.catalog.listFunctions().collect().toSeq.map(_.name)
-              .toDF("name")
-        }
-        df.createOrReplaceTempView(vn)
-        scala.util.matching.Regex.quoteReplacement(vn)
+      val which = m.group(1).toLowerCase(java.util.Locale.ROOT)
+      val vn = s"__graft_system_$which"
+      import spark.implicits._
+      val df = which match {
+        case "one" => Seq(0.toByte).toDF("dummy")
+        case "databases" =>
+          spark.catalog.listDatabases().collect().toSeq.map(_.name)
+            .toDF("name")
+        case "tables" =>
+          val db = spark.catalog.currentDatabase
+          spark.catalog.listTables().collect().toSeq
+            .map(t => (Option(t.database).getOrElse(db), t.name,
+              if (t.isTemporary) "View" else t.tableType))
+            .toDF("database", "name", "engine")
+        case "columns" =>
+          val db = spark.catalog.currentDatabase
+          spark.catalog.listTables().collect().toSeq.flatMap { t =>
+            try spark.catalog.listColumns(t.name).collect().toSeq
+              .zipWithIndex.map { case (c, i) =>
+                (Option(t.database).getOrElse(db), t.name, c.name,
+                  c.dataType, (i + 1).toLong)
+              }
+            catch { case _: Exception => Seq.empty }
+          }.toDF("database", "table", "name", "type", "position")
+        case "functions" =>
+          // every resolvable name: Spark built-ins + the dialect registry
+          // (column subset of CH's system.functions — name only)
+          spark.catalog.listFunctions().collect().toSeq.map(_.name)
+            .toDF("name")
       }
+      df.createOrReplaceTempView(vn)
+      vn
     })
 
   private val dateDiffQuotedUnit =
-    "(?i)\\b(?:datediff|date_diff|timestampdiff)\\s*\\(\\s*(')".r
+    SqlLexer.regex("(?i)\\b(?:datediff|date_diff|timestampdiff)\\s*\\(\\s*'")
+  // ClickHouse's argument-less count() is count(*). Spark rejects it, and
+  // its legacy allowParameterlessCount flag would make it return 0.
+  private val countNoArgs = SqlLexer.regex("(?i)(?<![\\w.])count\\s*\\(\\s*\\)")
   // chdb queries conventionally end in `FORMAT <name>` (output-format clause,
   // reference README examples); Spark returns DataFrames — the clause is
   // serialization advice, safe to strip at the tail of the statement
   private val trailingFormat =
-    "(?is)\\s+FORMAT\\s+[A-Za-z][A-Za-z0-9]*\\s*;?\\s*$".r
+    SqlLexer.regex("(?is)\\s+FORMAT\\s+[A-Za-z][A-Za-z0-9]*\\s*;?\\s*$")
   // `… SETTINGS max_threads=4, k='v'` — execution hints; Spark's equivalents
   // are session confs, safe to strip at the statement tail
-  private val trailingSettings =
-    "(?is)\\s+SETTINGS\\s+\\w+\\s*=\\s*[^,;]+(?:\\s*,\\s*\\w+\\s*=\\s*[^,;]+)*\\s*;?\\s*$".r
+  private val trailingSettings = SqlLexer.regex(
+    "(?is)\\s+SETTINGS\\s+\\w+\\s*=\\s*[^,;]+(?:\\s*,\\s*\\w+\\s*=\\s*[^,;]+)*\\s*;?\\s*$")
 
   // ---- ClickHouse read-path clause tail (r16) ----
   // `LIMIT n BY c1[, c2…]` (ClickHouse SELECT grammar; the reference emits
@@ -1062,20 +962,19 @@ final class GraftSession(val spark: SparkSession) extends DialectWave2 {
     distinctOnRe.findFirstMatchIn(q) match {
       case Some(m) =>
         val open = m.end - 1
-        val close = matchParenGs(q, open)
+        val close = SqlLexer.matchParen(q, open)
         require(close > 0, "DISTINCT ON: unbalanced parenthesis in key list")
         val keys = q.substring(open + 1, close - 1).trim.replace('"', '`')
         require(keys.nonEmpty, "DISTINCT ON requires at least one key")
         val rest = q.substring(close).trim // projection onward
         // split a trailing LIMIT, then a trailing ORDER BY (both optional)
-        val limRe = "(?is)^(.*\\S)\\s+LIMIT\\s+(\\d+)\\s*;?\\s*$".r
-        val (noLim, limTail) = limRe.findFirstMatchIn(rest) match {
+        val limRe = SqlLexer.regex("(?is)^(.*\\S)\\s+LIMIT\\s+(\\d+)\\s*;?\\s*$")
+        val (noLim, limTail) = limRe.findFirstIn(rest) match {
           case Some(lm) if parenBalanced(lm.group(1)) =>
             (lm.group(1), s" LIMIT ${lm.group(2)}")
           case _ => (rest.replaceAll(";\\s*$", ""), "")
         }
-        val ordRe = "(?is)^(.*\\S)\\s+ORDER\\s+BY\\s+(.+)$".r
-        val (core, ordOpt) = ordRe.findFirstMatchIn(noLim) match {
+        val (core, ordOpt) = orderByRe.findFirstIn(noLim) match {
           case Some(om) if parenBalanced(om.group(1)) &&
               parenBalanced(om.group(2)) =>
             (om.group(1), Some(om.group(2).trim.replace('"', '`')))
@@ -1095,9 +994,8 @@ final class GraftSession(val spark: SparkSession) extends DialectWave2 {
         // must name output columns anyway).
         val grouped = topLevelKeyword(core, "GROUP") >= 0 ||
           proj.matches("(?is)^DISTINCT\\b.*")
-        val modRe = "(?is)^(.+?)(\\s+(?:ASC|DESC))?(\\s+NULLS\\s+(?:FIRST|LAST))?\\s*$".r
         val terms = splitTopLevel(ord).map { t =>
-          modRe.findFirstMatchIn(t) match {
+          orderModRe.findFirstIn(t) match {
             case Some(tm) => (tm.group(1).trim,
               Option(tm.group(2)).getOrElse("") + Option(tm.group(3)).getOrElse(""))
             case None => (t, "")
@@ -1116,9 +1014,8 @@ final class GraftSession(val spark: SparkSession) extends DialectWave2 {
           // ORDER BY y) does not resolve — substitute each bare-identifier
           // ORDER BY term that names a projection alias with the aliased
           // expression (value-identical: the alias is a pure rename of it)
-          val aliasRe = "(?is)^(.+?)\\s+AS\\s+(`[^`]+`|[A-Za-z_][A-Za-z0-9_]*)\\s*$".r
           val aliasMap: Map[String, String] = splitTopLevel(proj).flatMap { item =>
-            aliasRe.findFirstMatchIn(item).map { am =>
+            trailingAliasRe.findFirstIn(item).map { am =>
               am.group(2).stripPrefix("`").stripSuffix("`")
                 .toLowerCase(java.util.Locale.ROOT) -> am.group(1).trim
             }
@@ -1142,27 +1039,6 @@ final class GraftSession(val spark: SparkSession) extends DialectWave2 {
         }
       case None => q
     }
-
-  /** Balanced-paren end (EXCLUSIVE index after ')') — local copy of the
-    * scanner shape used throughout; returns -1 when unbalanced.
-    */
-  private def matchParenGs(q: String, open: Int): Int = {
-    var d = 0; var i = open; var inStr = false; var inTick = false
-    while (i < q.length) {
-      val c = q.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else if (inTick) { if (c == '`') inTick = false }
-      else c match {
-        case '\'' => inStr = true
-        case '`' => inTick = true
-        case '(' => d += 1
-        case ')' => d -= 1; if (d == 0) return i + 1
-        case _ =>
-      }
-      i += 1
-    }
-    -1
-  }
 
   // `SELECT TOP n [WITH TIES] …` (r19): ClickHouse accepts the T-SQL TOP
   // spelling as an alternative to LIMIT — normalized here to the LIMIT
@@ -1211,11 +1087,9 @@ final class GraftSession(val spark: SparkSession) extends DialectWave2 {
     val at = topLevelKeyword(q, "QUALIFY")
     if (at < 0) return q
     val before = q.substring(0, at)
-    val lastSetOp = Seq("UNION", "INTERSECT", "EXCEPT").flatMap { k =>
-      Iterator.iterate(topLevelKeyword(before, k))(p =>
-          if (p < 0) -1 else topLevelKeyword(before, k, p + 1))
-        .takeWhile(_ >= 0).toSeq.lastOption.map(p => (p, k))
-    }.sortBy(_._1).lastOption
+    val lastSetOp = Seq("UNION", "INTERSECT", "EXCEPT")
+      .map(k => (SqlLexer.lastTopLevelKeyword(before, k), k))
+      .filter(_._1 >= 0).maxByOption(_._1)
     lastSetOp match {
       case Some((p, k)) =>
         var branchStart = p + k.length
@@ -1245,15 +1119,12 @@ final class GraftSession(val spark: SparkSession) extends DialectWave2 {
   // bound as ungrouped WITH FILL. Contract: the ORDER BY must name result
   // columns (the subquery wrap re-scopes it; ClickHouse's
   // order-by-source-column extension is not carried through this clause).
-  private val limitTiesRe =
-    ("(?is)^(.*\\S)\\s+ORDER\\s+BY\\s+(.+?)\\s+LIMIT\\s+(\\d+)" +
-      "\\s+WITH\\s+TIES\\s*;?\\s*$").r
+  private val limitTiesRe = SqlLexer.regex(
+    "(?is)^(.*\\S)\\s+ORDER\\s+BY\\s+(.+?)\\s+LIMIT\\s+(\\d+)" +
+      "\\s+WITH\\s+TIES\\s*;?\\s*$")
   private def rewriteWithTies(q: String): String =
-    limitTiesRe.findFirstMatchIn(q) match {
-      case Some(m) if parenBalanced(m.group(1)) && parenBalanced(m.group(2)) &&
-          isTopLevelAt(q, m.end(1)) &&
-          !inLiteralAt(q, q.toUpperCase(java.util.Locale.ROOT)
-            .lastIndexOf("WITH")) =>
+    limitTiesRe.findFirstIn(q) match {
+      case Some(m) if parenBalanced(m.group(1)) && parenBalanced(m.group(2)) =>
         val ord = m.group(2).trim.replace('"', '`')
         val n = m.group(3).toLong
         s"""SELECT * EXCEPT (__graft_wt_rk) FROM (
@@ -1267,121 +1138,13 @@ final class GraftSession(val spark: SparkSession) extends DialectWave2 {
   // accepts all three documented shapes: `LIMIT n BY`, `LIMIT m, n BY`
   // (offset-first, the ClickHouse docs' bracketed form) and
   // `LIMIT n OFFSET m BY`
-  private val limitByRe =
-    ("(?is)^(.*?)\\s+LIMIT\\s+(?:(\\d+)\\s*,\\s*)?(\\d+)(?:\\s+OFFSET\\s+(\\d+))?" +
-      "\\s+BY\\s+(.+?)(\\s+LIMIT\\s+(\\d+))?\\s*;?\\s*$").r
-  /** Paren balance of SQL text, ignoring parens inside '…'/`…` quoting —
-    * a smiley in a string literal must not read as an unbalanced paren.
-    */
-  private[engine] def parenBalanced(s: String): Boolean = {
-    var d = 0; var i = 0; var inStr = false; var inTick = false
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else if (inTick) { if (c == '`') inTick = false }
-      else c match {
-        case '\'' => inStr = true
-        case '`' => inTick = true
-        case '(' => d += 1
-        case ')' => d -= 1; if (d < 0) return false
-        case _ =>
-      }
-      i += 1
-    }
-    d == 0
-  }
-  /** Is `pos` at paren-depth 0 AND outside '…'/`…` quoting? (Scans from the
-    * start — quote state is not locally decidable.)
-    */
-  private def isTopLevelAt(s: String, pos: Int): Boolean = {
-    var d = 0; var i = 0; var inStr = false; var inTick = false
-    while (i < pos && i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else if (inTick) { if (c == '`') inTick = false }
-      else c match {
-        case '\'' => inStr = true
-        case '`' => inTick = true
-        case '(' => d += 1
-        case ')' => d -= 1
-        case _ =>
-      }
-      i += 1
-    }
-    d == 0 && !inStr && !inTick
-  }
-  /** Is `pos` inside a '…'/`…` quoted region? */
-  private[engine] def inLiteralAt(s: String, pos: Int): Boolean = {
-    var i = 0; var inStr = false; var inTick = false
-    while (i < pos && i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else if (inTick) { if (c == '`') inTick = false }
-      else if (c == '\'') inStr = true
-      else if (c == '`') inTick = true
-      i += 1
-    }
-    inStr || inTick
-  }
-  /** Index of the first occurrence of the keyword at the SAME paren depth
-    * as position `from` (outside '…'/`…` quoting), or -1. With the default
-    * `from = 0` this is "first top-level occurrence"; a positive `from`
-    * scans a subscope and gives up when that scope's ')' closes (the
-    * shared scanner DialectWave2's star-transformer expansion uses too).
-    */
-  private[engine] def topLevelKeyword(s: String, kw: String, from: Int = 0): Int = {
-    val u = s.toUpperCase(java.util.Locale.ROOT)
-    val k = kw.toUpperCase(java.util.Locale.ROOT)
-    def isWordChar(c: Char): Boolean = Character.isLetterOrDigit(c) || c == '_'
-    var d = 0; var i = from; var inStr = false; var inTick = false
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else if (inTick) { if (c == '`') inTick = false }
-      else c match {
-        case '\'' => inStr = true
-        case '`' => inTick = true
-        case '(' => d += 1
-        case ')' => d -= 1; if (d < 0) return -1
-        case _ =>
-          if (d == 0 && u.startsWith(k, i) &&
-              (i == 0 || !isWordChar(u.charAt(i - 1))) &&
-              (i + k.length >= u.length || !isWordChar(u.charAt(i + k.length))))
-            return i
-      }
-      i += 1
-    }
-    -1
-  }
-  /** Split on top-level commas (outside parens and quotes). */
-  private[engine] def splitTopLevel(s: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    var d = 0; var i = 0; var start = 0; var inStr = false; var inTick = false
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else if (inTick) { if (c == '`') inTick = false }
-      else c match {
-        case '\'' => inStr = true
-        case '`' => inTick = true
-        case '(' => d += 1
-        case ')' => d -= 1
-        case ',' if d == 0 => out += s.substring(start, i); start = i + 1
-        case _ =>
-      }
-      i += 1
-    }
-    out += s.substring(start)
-    out.result().map(_.trim).filter(_.nonEmpty)
-  }
+  private val limitByRe = SqlLexer.regex(
+    "(?is)^(.*?)\\s+LIMIT\\s+(?:(\\d+)\\s*,\\s*)?(\\d+)(?:\\s+OFFSET\\s+(\\d+))?" +
+      "\\s+BY\\s+(.+?)(\\s+LIMIT\\s+(\\d+))?\\s*;?\\s*$")
   private def rewriteLimitBy(q: String): String =
-    limitByRe.findFirstMatchIn(q) match {
-      case Some(m) if parenBalanced(m.group(1)) && parenBalanced(m.group(5)) &&
-          // the matched LIMIT keyword itself must sit at top level OUTSIDE
-          // string literals — 'rate LIMIT 5 BY user' in a WHERE literal is
-          // data, not a clause
-          isTopLevelAt(q, q.toUpperCase(java.util.Locale.ROOT)
-            .indexOf("LIMIT", m.end(1))) =>
+    limitByRe.findFirstIn(q) match {
+      // a balanced prefix puts the matched LIMIT at top level
+      case Some(m) if parenBalanced(m.group(1)) && parenBalanced(m.group(5)) =>
         // the reference emits PG-style double-quoted identifiers in the BY
         // list (sql_executor.py:907-910: LIMIT 1 BY "a", "b") — Spark quotes
         // with backticks (ClickHouse strings are single-quoted, so '"' here
@@ -1396,8 +1159,7 @@ final class GraftSession(val spark: SparkSession) extends DialectWave2 {
         val keep =
           if (off == 0) s"__graft_lb_rn <= $n"
           else s"__graft_lb_rn > $off AND __graft_lb_rn <= ${off + n}"
-        val ordRe = "(?is)^(.*\\S)\\s+ORDER\\s+BY\\s+(.+)$".r
-        val (inner0, ordOpt) = ordRe.findFirstMatchIn(base) match {
+        val (inner0, ordOpt) = orderByRe.findFirstIn(base) match {
           case Some(om) if parenBalanced(om.group(1)) && parenBalanced(om.group(2)) =>
             (om.group(1), Some(om.group(2).trim))
           case _ => (base, None)
@@ -1416,9 +1178,8 @@ final class GraftSession(val spark: SparkSession) extends DialectWave2 {
         val distinct = selEnd >= 0 &&
           inner0.substring(selEnd).matches("(?is)^\\s*DISTINCT\\b.*")
         val grouped = topLevelKeyword(inner0, "GROUP") >= 0
-        val modRe = "(?is)^(.+?)(\\s+(?:ASC|DESC))?(\\s+NULLS\\s+(?:FIRST|LAST))?\\s*$".r
         val terms0 = splitTopLevel(ordOpt.getOrElse(cols).replace('"', '`')).map {
-          t => modRe.findFirstMatchIn(t) match {
+          t => orderModRe.findFirstIn(t) match {
             case Some(tm) => (tm.group(1).trim,
               Option(tm.group(2)).getOrElse("") + Option(tm.group(3)).getOrElse(""))
             case None => (t, "")
@@ -1432,7 +1193,6 @@ final class GraftSession(val spark: SparkSession) extends DialectWave2 {
           // rows. Resolve them against the projection list here; refuse
           // loudly when that's impossible (the fallback branch below).
           val projItems = splitTopLevel(proj)
-          val aliasRe = "(?is)^(.*\\S)\\s+AS\\s+([A-Za-z_]\\w*|`[^`]+`)\\s*$".r
           val terms = terms0.map {
             case (e, mod) if e.matches("\\d+") =>
               val k = e.toInt
@@ -1440,7 +1200,7 @@ final class GraftSession(val spark: SparkSession) extends DialectWave2 {
                 s"ORDER BY position $k with LIMIT BY is out of range " +
                   s"(projection has ${projItems.length} columns)")
               val item = projItems(k - 1)
-              val expr = aliasRe.findFirstMatchIn(item).map(_.group(1)).getOrElse(item)
+              val expr = trailingAliasRe.findFirstIn(item).map(_.group(1).trim).getOrElse(item)
               (expr, mod)
             case other => other
           }
@@ -1478,56 +1238,15 @@ final class GraftSession(val spark: SparkSession) extends DialectWave2 {
   // closing paren) — a WHERE inside a nested subquery never terminates it.
   private val prewhereBounds = Seq("WHERE", "GROUP", "HAVING", "ORDER",
     "LIMIT", "WINDOW", "UNION", "INTERSECT", "EXCEPT", "SETTINGS", "FORMAT")
+  private val prewhereRe = SqlLexer.regex("(?i)\\bPREWHERE\\b")
   private def rewritePrewhere(q: String): String = {
-    val u = q.toUpperCase(java.util.Locale.ROOT)
-    def isWordChar(c: Char): Boolean = Character.isLetterOrDigit(c) || c == '_'
-    def isWord(i: Int, k: String): Boolean =
-      u.startsWith(k, i) && (i == 0 || !isWordChar(u.charAt(i - 1))) &&
-        (i + k.length >= u.length || !isWordChar(u.charAt(i + k.length)))
-    // locate the first PREWHERE outside literals, remembering its depth
-    var i = 0; var d = 0; var inStr = false; var inTick = false
-    var p = -1; var pd = 0
-    while (i < q.length && p < 0) {
-      val c = q.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else if (inTick) { if (c == '`') inTick = false }
-      else c match {
-        case '\'' => inStr = true
-        case '`' => inTick = true
-        case '(' => d += 1
-        case ')' => d -= 1
-        case _ => if (isWord(i, "PREWHERE")) { p = i; pd = d }
-      }
-      i += 1
-    }
-    if (p < 0) return q
-    // extent of a condition starting at `from` (known depth pd, outside
-    // literals): up to the next same-depth boundary keyword or the
-    // enclosing scope's ')'
-    def boundAfter(from: Int): Int = {
-      var j = from; var dd = pd; var inS = false; var inT = false
-      while (j < q.length) {
-        val c = q.charAt(j)
-        if (inS) { if (c == '\'') inS = false }
-        else if (inT) { if (c == '`') inT = false }
-        else c match {
-          case '\'' => inS = true
-          case '`' => inT = true
-          case '(' => dd += 1
-          case ')' => dd -= 1; if (dd < pd) return j
-          case _ =>
-            if (dd == pd && prewhereBounds.exists(isWord(j, _))) return j
-        }
-        j += 1
-      }
-      q.length
-    }
+    val p = prewhereRe.findFirstIn(q).getOrElse(return q).start
     val condStart = p + "PREWHERE".length
-    val b1 = boundAfter(condStart)
+    val b1 = SqlLexer.clauseExtent(q, condStart, prewhereBounds)
     val cond1 = q.substring(condStart, b1).trim
     val out =
-      if (b1 < q.length && isWord(b1, "WHERE")) {
-        val b2 = boundAfter(b1 + "WHERE".length)
+      if (q.regionMatches(true, b1, "WHERE", 0, 5)) {
+        val b2 = SqlLexer.clauseExtent(q, b1 + "WHERE".length, prewhereBounds)
         val cond2 = q.substring(b1 + "WHERE".length, b2).trim
         q.substring(0, p) + s"WHERE ($cond1) AND ($cond2) " + q.substring(b2)
       } else
@@ -1541,22 +1260,19 @@ final class GraftSession(val spark: SparkSession) extends DialectWave2 {
   // alias). Seed-divergent across engines by nature — oracle checks are
   // row-count bounds, not hashes. `SAMPLE k OFFSET m` takes the
   // deterministic md5-bucket path below instead (exact oracles).
-  private val sampleRe =
-    ("(?i)\\b(FROM\\s+[\\w.`\"]+)((?:\\s+(?:AS\\s+)?[A-Za-z_]\\w*)?)" +
-      "\\s+SAMPLE\\s+(\\d+(?:\\.\\d+)?(?:\\s*/\\s*\\d+(?:\\.\\d+)?)?)").r
+  private val sampleRe = SqlLexer.regex(
+    "(?i)\\b(FROM\\s+[\\w.`\"]+)((?:\\s+(?:AS\\s+)?[A-Za-z_]\\w*)?)" +
+      "\\s+SAMPLE\\s+(\\d+(?:\\.\\d+)?(?:\\s*/\\s*\\d+(?:\\.\\d+)?)?)")
   // `FROM t [alias] FINAL` — ClickHouse's merge-collapse modifier for
   // Replacing/Collapsing engines (reference core.py:7840 lists it among the
   // clause keywords it tolerates). Our tables are exact — no deferred
   // merges exist — so FINAL is the identity; accept and drop it. Anchored
   // to a FROM table reference so a column named `final` is untouched.
-  private val finalRe =
-    ("(?i)\\b(FROM\\s+[\\w.`\"]+(?:\\s+(?:AS\\s+)?[A-Za-z_]\\w*)?)" +
-      "\\s+FINAL\\b").r
+  private val finalRe = SqlLexer.regex(
+    "(?i)\\b(FROM\\s+[\\w.`\"]+(?:\\s+(?:AS\\s+)?[A-Za-z_]\\w*)?)" +
+      "\\s+FINAL\\b")
   private def rewriteFinal(q: String): String =
-    finalRe.replaceAllIn(q, { m =>
-      scala.util.matching.Regex.quoteReplacement(
-        if (inLiteralAt(q, m.start)) m.matched else m.group(1))
-    })
+    finalRe.replaceAllIn(q, _.group(1))
 
   // `[LEFT] ARRAY JOIN items` — ClickHouse's explode clause (reference
   // core.py:7840 tolerates it in its SQL scanner). Spark-first mapping:
@@ -1567,24 +1283,22 @@ final class GraftSession(val spark: SparkSession) extends DialectWave2 {
   //  - `ARRAY JOIN a AS x, b AS y` → element-wise ZIP (ClickHouse zips
   //    parallel arrays, NOT a cartesian) via explode(arrays_zip(a, b))
   // Literal-aware; the items list must be paren-balanced.
-  private val arrayJoinRe =
-    ("(?is)\\bFROM\\s+([\\w.`\"]+" +
+  private val arrayJoinRe = SqlLexer.regex(
+    "(?is)\\bFROM\\s+([\\w.`\"]+" +
       "(?:\\s+(?:AS\\s+)?(?!(?:LEFT|ARRAY|INNER|CROSS|JOIN|WHERE|GROUP|ORDER" +
       "|LIMIT|HAVING|UNION|ON|USING)\\b)[A-Za-z_]\\w*)?)" +
       "\\s+(LEFT\\s+)?ARRAY\\s+JOIN\\s+(.+?)" +
       "(?=\\s+(?:WHERE|GROUP\\s+BY|HAVING|ORDER\\s+BY|LIMIT|WINDOW|UNION" +
-      "|SETTINGS|FORMAT)\\b|\\s*;?\\s*$)").r
+      "|SETTINGS|FORMAT)\\b|\\s*;?\\s*$)")
   private def rewriteArrayJoin(q: String): String =
     arrayJoinRe.replaceAllIn(q, { m =>
       val items0 = m.group(3)
-      if (inLiteralAt(q, m.start) || !parenBalanced(items0))
-        scala.util.matching.Regex.quoteReplacement(m.matched)
+      if (!parenBalanced(items0)) m.matched
       else {
         val tbl = m.group(1).trim
         val explodeFn = if (m.group(2) != null) "explode_outer" else "explode"
-        val aliasRe = "(?is)^(.+?)\\s+AS\\s+([A-Za-z_]\\w*|`[^`]+`)\\s*$".r
         val items = splitTopLevel(items0).map { it =>
-          aliasRe.findFirstMatchIn(it) match {
+          trailingAliasRe.findFirstIn(it) match {
             case Some(x) => (x.group(1).trim, Some(x.group(2)))
             case None => (it.trim, None)
           }
@@ -1618,27 +1332,23 @@ final class GraftSession(val spark: SparkSession) extends DialectWave2 {
             s"FROM (SELECT * EXCEPT (__graft_aj), $fields FROM $tbl " +
               s"LATERAL VIEW $explodeFn(arrays_zip($zip)) __graft_ajt AS __graft_aj) __graft_aj_w"
         }
-        scala.util.matching.Regex.quoteReplacement(repl)
+        repl
       }
     })
 
   private def rewriteSample(q: String): String =
     sampleRe.replaceAllIn(q, { m =>
-      if (inLiteralAt(q, m.start)) // 'from t sample 5' inside a string is data
-        scala.util.matching.Regex.quoteReplacement(m.matched)
-      else {
-        // `SAMPLE a/b` (the common ClickHouse fraction spelling, r19) is
-        // parsed as an exact fraction; decimals keep their BigDecimal path
-        val g = m.group(3)
-        val v =
-          if (g.contains("/")) {
-            val p = g.split("/").map(s => BigDecimal(s.trim)); p(0) / p(1)
-          } else BigDecimal(g)
-        val ts =
-          if (v <= 1) s"TABLESAMPLE (${(v * 100).bigDecimal.stripTrailingZeros.toPlainString} PERCENT)"
-          else s"TABLESAMPLE (${v.toBigInt} ROWS)"
-        scala.util.matching.Regex.quoteReplacement(s"${m.group(1)} $ts${m.group(2)}")
-      }
+      // `SAMPLE a/b` (the common ClickHouse fraction spelling, r19) is
+      // parsed as an exact fraction; decimals keep their BigDecimal path
+      val g = m.group(3)
+      val v =
+        if (g.contains("/")) {
+          val p = g.split("/").map(s => BigDecimal(s.trim)); p(0) / p(1)
+        } else BigDecimal(g)
+      val ts =
+        if (v <= 1) s"TABLESAMPLE (${(v * 100).bigDecimal.stripTrailingZeros.toPlainString} PERCENT)"
+        else s"TABLESAMPLE (${v.toBigInt} ROWS)"
+      s"${m.group(1)} $ts${m.group(2)}"
     })
 
   // `FROM t [alias] SAMPLE k OFFSET m` (r19): ClickHouse's disjoint-slice
@@ -1655,10 +1365,10 @@ final class GraftSession(val spark: SparkSession) extends DialectWave2 {
   // key) — a documented engine contract. k/m accept decimals or a/b
   // fractions in [0,1]; the row-count form (`SAMPLE 10000 OFFSET 1/2`)
   // has no deterministic-slice meaning and refuses.
-  private val sampleOffsetRe =
-    ("(?i)\\bFROM\\s+([\\w.`\"]+)((?:\\s+(?:AS\\s+)?[A-Za-z_]\\w*)?)" +
+  private val sampleOffsetRe = SqlLexer.regex(
+    "(?i)\\bFROM\\s+([\\w.`\"]+)((?:\\s+(?:AS\\s+)?[A-Za-z_]\\w*)?)" +
       "\\s+SAMPLE\\s+(\\d+(?:\\.\\d+)?(?:\\s*/\\s*\\d+(?:\\.\\d+)?)?)" +
-      "\\s+OFFSET\\s+(\\d+(?:\\.\\d+)?(?:\\s*/\\s*\\d+(?:\\.\\d+)?)?)").r
+      "\\s+OFFSET\\s+(\\d+(?:\\.\\d+)?(?:\\s*/\\s*\\d+(?:\\.\\d+)?)?)")
   private def parseFrac(s: String): Double = {
     val parts = s.split("/").map(_.trim)
     if (parts.length == 2) parts(0).toDouble / parts(1).toDouble
@@ -1666,29 +1376,24 @@ final class GraftSession(val spark: SparkSession) extends DialectWave2 {
   }
   private def rewriteSampleOffset(q: String): String =
     sampleOffsetRe.replaceAllIn(q, { m =>
-      if (inLiteralAt(q, m.start))
-        scala.util.matching.Regex.quoteReplacement(m.matched)
-      else {
-        val k = parseFrac(m.group(3)); val off = parseFrac(m.group(4))
-        if (k > 1 || off > 1) throw new UnsupportedOperationException(
-          "SAMPLE k OFFSET m supports fractional k and m in [0, 1] " +
-            "(decimals or a/b fractions); the approximate row-count form " +
-            "cannot name a deterministic slice — use SAMPLE n without OFFSET")
-        val buckets = 10000L
-        val lo = math.round(off * buckets)
-        val hi = math.min(buckets, lo + math.round(k * buckets))
-        val tbl = m.group(1)
-        val bare = tbl.replace("`", "").replace("\"", "")
-        val alias = {
-          val a = m.group(2).trim.replaceFirst("(?i)^AS\\s+", "")
-          if (a.nonEmpty) a else bare.split('.').last
-        }
-        val key = spark.table(bare).columns.head
-        val dev = s"(CAST(conv(substr(md5(CAST(`$key` AS STRING)), 1, 15), " +
-          s"16, 10) AS BIGINT) % $buckets)"
-        scala.util.matching.Regex.quoteReplacement(
-          s"FROM (SELECT * FROM $tbl WHERE $dev >= $lo AND $dev < $hi) $alias")
+      val k = parseFrac(m.group(3)); val off = parseFrac(m.group(4))
+      if (k > 1 || off > 1) throw new UnsupportedOperationException(
+        "SAMPLE k OFFSET m supports fractional k and m in [0, 1] " +
+          "(decimals or a/b fractions); the approximate row-count form " +
+          "cannot name a deterministic slice — use SAMPLE n without OFFSET")
+      val buckets = 10000L
+      val lo = math.round(off * buckets)
+      val hi = math.min(buckets, lo + math.round(k * buckets))
+      val tbl = m.group(1)
+      val bare = tbl.replace("`", "").replace("\"", "")
+      val alias = {
+        val a = m.group(2).trim.replaceFirst("(?i)^AS\\s+", "")
+        if (a.nonEmpty) a else bare.split('.').last
       }
+      val key = spark.table(bare).columns.head
+      val dev = s"(CAST(conv(substr(md5(CAST(`$key` AS STRING)), 1, 15), " +
+        s"16, 10) AS BIGINT) % $buckets)"
+      s"FROM (SELECT * FROM $tbl WHERE $dev >= $lo AND $dev < $hi) $alias"
     })
 
   // PREWHERE folds and SAMPLE rewrites FIRST (they precede LIMIT BY in
@@ -1698,15 +1403,16 @@ final class GraftSession(val spark: SparkSession) extends DialectWave2 {
   // wraps so their generated subqueries are wrapped like any other FROM;
   // star modifiers expand before LIMIT BY/WITH FILL so those see plain
   // projections; table-function call sites resolve last, inside whatever
-  // the wraps produced.
+  // the wraps produced. count() becomes count(*) first, so the schema
+  // probes of later rewrites parse it.
   private def rewriteDialect(q: String): String =
     dateDiffQuotedUnit.replaceAllIn(
       rewriteTableFns(rewriteWithFill(rewriteLimitBy(rewriteWithTies(rewriteQualify(rewriteStarModifiers(
         rewriteDistinctOn(rewriteTopN(rewriteWithTotals(rewriteArrayJoin(rewriteAnyJoin(rewriteAsofJoin(
-          dropGlobal(normalizeJoinStrictness(rewriteSample(rewriteSampleOffset(rewriteFinal(
-            rewritePrewhere(rewriteScalarWith(trailingFormat.replaceFirstIn(
-              trailingSettings.replaceFirstIn(q, ""), "")))))))))))))))))))),
-      m => "dateDiffCH($1")
+          dropGlobal(normalizeStrictness(rewriteSample(rewriteSampleOffset(rewriteFinal(
+            rewritePrewhere(rewriteScalarWith(countNoArgs.replaceAllIn(trailingFormat.replaceAllIn(
+              trailingSettings.replaceAllIn(q, _ => ""), _ => ""), _ => "count(*)")))))))))))))))))))),
+      _ => "dateDiffCH('")
 
   /** Parameterized query — the reference's `{name:Type}` placeholders bound
     * via params= (reference chdb/__init__.py:145-160, README.md:276-289).
@@ -1715,10 +1421,11 @@ final class GraftSession(val spark: SparkSession) extends DialectWave2 {
     * is dropped — Spark infers from the bound value.
     */
   def sql(query: String, params: Map[String, Any]): DataFrame = {
-    val rewritten = "\\{\\s*(\\w+)\\s*:\\s*[\\w()]+\\s*\\}".r
-      .replaceAllIn(rewriteDialect(query), m => ":" + m.group(1))
+    val rewritten = placeholderRe.replaceAllIn(
+      rewriteDialect(SqlLexer.stripComments(query)), m => ":" + m.group(1))
     spark.sql(rewritten, params)
   }
+  private val placeholderRe = SqlLexer.regex("\\{\\s*(\\w+)\\s*:\\s*[\\w()]+\\s*\\}")
 
   /** chdb's `query(sql, format)` surface (reference chdb/__init__.py:145,
     * README examples): run SQL, render the (driver-sized) result in the
@@ -1732,7 +1439,8 @@ final class GraftSession(val spark: SparkSession) extends DialectWave2 {
   private val formatTailName =
     "(?is)\\s+FORMAT\\s+([A-Za-z][A-Za-z0-9]*)\\s*;?\\s*$".r
   private def effectiveFormat(query: String, fallback: String): String =
-    formatTailName.findFirstMatchIn(query).map(_.group(1)).getOrElse(fallback)
+    formatTailName.findFirstMatchIn(SqlLexer.stripComments(query))
+      .map(_.group(1)).getOrElse(fallback)
 
   def queryAs(query: String, format: String = "CSV"): String = {
     val df = sql(query)

@@ -362,4 +362,53 @@ class ClauseRewriteSpec extends SparkTestBase {
     val n = g.sql("SELECT t.n FROM cr_big3 t SAMPLE 0.5 WHERE t.n >= 0").count()
     assert(n > 200 && n < 800)
   }
+
+  test("a comment between clauses neither hides nor breaks LIMIT BY") {
+    Seq((0, 0), (0, 1), (1, 1), (1, 2)).toDF("k", "v").createOrReplaceTempView("cr_kv")
+    val rows = g.sql("SELECT k, v -- k's first row\nFROM cr_kv ORDER BY k, v LIMIT 1 BY k")
+      .collect().map(r => (r.getInt(0), r.getInt(1))).toSeq
+    assert(rows == Seq((0, 0), (1, 1)), rows.toString)
+  }
+
+  test("FINAL inside a literal with a backslash-escaped quote is data") {
+    docs()
+    val s = g.sql("SELECT 'x\\' FROM cr_docs FINAL' AS s FROM cr_docs LIMIT 1")
+      .head().getString(0)
+    assert(s == "x' FROM cr_docs FINAL", s)
+  }
+
+  test("argument-less count() is count(*)") {
+    Seq(("click", 1), ("view", 2), ("click", 3), (null, 4)).toDF("event_type", "n")
+      .createOrReplaceTempView("cr_events")
+    def counts(agg: String) =
+      g.sql(s"SELECT event_type, $agg AS c FROM cr_events GROUP BY event_type ORDER BY event_type")
+        .collect().map(r => (Option(r.getString(0)), r.getLong(1))).toSeq
+    assert(counts("count()") == counts("count(*)"))
+    assert(counts("count()") == Seq((None, 1L), (Some("click"), 2L), (Some("view"), 1L)))
+  }
+
+  test("a {name:Type} placeholder inside a literal is not bound") {
+    val r = g.sql("SELECT '{x:String}' AS s, {n:Int} AS n", Map("n" -> 1)).head()
+    assert(r.getString(0) == "{x:String}" && r.getInt(1) == 1)
+  }
+
+  test("a leading comment does not hide ALTER TABLE … DELETE from routing") {
+    val p = java.nio.file.Files.createTempDirectory("graft_cr_alter").toString + "/t"
+    graft.io.DeltaNative.write(Seq((1, "a"), (2, "b")).toDF("k", "v"), p)
+    val gs = g
+    gs.registerDelta("cr_alter_d", p)
+    gs.sql("-- note\nALTER TABLE cr_alter_d DELETE WHERE k = 1")
+    assert(gs.sql("SELECT k FROM cr_alter_d").collect().map(_.getInt(0)).toSeq == Seq(2))
+  }
+
+  test("comment markers in an INSERT … FORMAT CSV payload are data") {
+    val p = java.nio.file.Files.createTempDirectory("graft_cr_ins").toString + "/t"
+    graft.io.DeltaNative.write(Seq((0, "seed")).toDF("k", "v"), p)
+    val gs = g
+    gs.registerDelta("cr_ins_d", p)
+    gs.sql("/* load */ INSERT INTO cr_ins_d FORMAT CSV\n1,a--b\n2,c/*d*/e\n")
+    val rows = gs.sql("SELECT k, v FROM cr_ins_d ORDER BY k")
+      .collect().map(r => (r.getInt(0), r.getString(1))).toSeq
+    assert(rows == Seq((0, "seed"), (1, "a--b"), (2, "c/*d*/e")), rows.toString)
+  }
 }
