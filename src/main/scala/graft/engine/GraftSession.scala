@@ -40,7 +40,8 @@ final class GraftSession(val spark: SparkSession) extends DialectWave2 {
       case _ =>
     }
     val q = SqlLexer.stripComments(query)
-    outfileRe.findFirstIn(q).foreach { m =>
+    val trimmedU = q.trim.toUpperCase(java.util.Locale.ROOT)
+    if (trimmedU.contains("OUTFILE")) outfileRe.findFirstIn(q).foreach { m =>
       return writeOutfile(m.group(1), m.group(2), Option(m.group(4)))
     }
     // mutation statements (r17): ClickHouse's ALTER TABLE … UPDATE/DELETE
@@ -49,7 +50,6 @@ final class GraftSession(val spark: SparkSession) extends DialectWave2 {
     // copy-on-write for [[registerDelta]] tables, capability-gated
     // passthrough otherwise. Mutations return an empty frame (ClickHouse
     // returns no rows; the observable effect is the table's new state).
-    val trimmedU = q.trim.toUpperCase(java.util.Locale.ROOT)
     if (trimmedU.startsWith("ALTER TABLE")) q match {
       case alterUpdateRe(tbl, setList, where) =>
         updateSet(tbl, parseSetList(setList), where); return emptyResult

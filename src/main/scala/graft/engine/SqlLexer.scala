@@ -19,8 +19,9 @@ private[engine] object SqlLexer {
   private def isWordChar(c: Char): Boolean = Character.isLetterOrDigit(c) || c == '_'
 
   /** Index just past the string, quoted identifier or comment starting at
-    * `i`, or `i` when none starts there. Unterminated tokens run to the end
-    * (Spark's parser reports them).
+    * `i`, or `i` when none starts there. An unterminated string, name or
+    * `--` comment runs to the end; an unclosed block comment is no comment
+    * at all, so it reaches Spark's parser, which reports it.
     */
   private def tokenEnd(s: String, i: Int): Int = {
     val n = s.length
@@ -39,22 +40,35 @@ private[engine] object SqlLexer {
         val nl = s.indexOf('\n', i)
         if (nl < 0) n else nl
       case '/' if i + 1 < n && s.charAt(i + 1) == '*' =>
-        var depth = 0; var j = i
-        while (j < n) {
-          if (s.startsWith("/*", j)) { depth += 1; j += 2 }
-          else if (s.startsWith("*/", j)) { depth -= 1; j += 2; if (depth == 0) return j }
-          else j += 1
-        }
-        n
+        val e = blockCommentEnd(s, i)
+        if (e < 0) i else e
       case _ => i
     }
   }
 
-  private def isComment(s: String, i: Int): Boolean =
-    s.startsWith("--", i) || (s.startsWith("/*", i) && !s.startsWith("/*+", i))
+  /** Can a string, quoted identifier or comment start with `c`? */
+  private def opensToken(c: Char): Boolean =
+    c == '\'' || c == '"' || c == '`' || c == '-' || c == '/'
 
-  /** Each `--` or `/* */` comment becomes one space; `/*+ … */` hints and
-    * everything else are kept verbatim.
+  /** Index just past the (nested) `/* … */` comment opening at `i`, or -1
+    * when it is never closed.
+    */
+  private def blockCommentEnd(s: String, i: Int): Int = {
+    var depth = 0; var j = i
+    while (j < s.length) {
+      if (s.startsWith("/*", j)) { depth += 1; j += 2 }
+      else if (s.startsWith("*/", j)) { depth -= 1; j += 2; if (depth == 0) return j }
+      else j += 1
+    }
+    -1
+  }
+
+  private def isComment(s: String, i: Int): Boolean =
+    s.startsWith("--", i) ||
+      (s.startsWith("/*", i) && !s.startsWith("/*+", i) && blockCommentEnd(s, i) >= 0)
+
+  /** Each `--` or `/* */` comment becomes one space; `/*+ … */` hints, an
+    * unclosed block comment and everything else are kept verbatim.
     */
   def stripComments(s: String): String = {
     val sb = new java.lang.StringBuilder(s.length)
@@ -86,12 +100,13 @@ private[engine] object SqlLexer {
     * offsets into the mask index the original text.
     */
   def mask(s: String): String = {
-    val out = s.toCharArray
+    var out: Array[Char] = null // copied on the first token: plain code is its own mask
     var i = 0
     while (i < s.length) {
-      val e = tokenEnd(s, i)
+      val e = if (opensToken(s.charAt(i))) tokenEnd(s, i) else i
       if (e == i) i += 1
       else {
+        if (out == null) out = s.toCharArray
         val q = s.charAt(i)
         if (q == '\'' || q == '"' || q == '`') {
           val closed = e - 1 > i && s.charAt(e - 1) == q
@@ -101,7 +116,7 @@ private[engine] object SqlLexer {
         i = e
       }
     }
-    new String(out)
+    if (out == null) s else new String(out)
   }
 
   /** A regex run on the code mask: it never matches inside a literal or a
@@ -120,11 +135,15 @@ private[engine] object SqlLexer {
       }
     }
     def findFirstIn(s: String): Option[Regex.Match] = findAllIn(s).nextOption()
-    /** Replace every match with `f(match)`, taken literally (no `$` groups). */
+    /** Replace every match with `f(match)`, taken literally (no `$` groups);
+      * `s` itself when nothing matches.
+      */
     def replaceAllIn(s: String, f: Regex.Match => String): String = {
+      val it = findAllIn(s)
+      if (!it.hasNext) return s
       val sb = new java.lang.StringBuilder(s.length)
       var last = 0
-      findAllIn(s).foreach { m =>
+      it.foreach { m =>
         sb.append(s, last, m.start).append(f(m)); last = m.end
       }
       sb.append(s, last, s.length).toString
@@ -192,8 +211,10 @@ private[engine] object SqlLexer {
   /** First `kw` at the paren depth of `from`, or -1 when the scope closes
     * first. With `from = 0` that is the first top-level occurrence.
     */
-  def topLevelKeyword(s: String, kw: String, from: Int = 0): Int = {
-    val u = mask(s)
+  def topLevelKeyword(s: String, kw: String, from: Int = 0): Int =
+    keywordInCode(mask(s), kw, from)
+
+  private def keywordInCode(u: String, kw: String, from: Int): Int = {
     var d = 0; var i = from
     while (i < u.length) {
       u.charAt(i) match {
@@ -207,17 +228,32 @@ private[engine] object SqlLexer {
   }
 
   /** Last top-level `kw`, or -1. */
-  def lastTopLevelKeyword(s: String, kw: String): Int =
-    Iterator.iterate(topLevelKeyword(s, kw))(p =>
-      if (p < 0) -1 else topLevelKeyword(s, kw, p + kw.length))
+  def lastTopLevelKeyword(s: String, kw: String): Int = {
+    val u = mask(s)
+    Iterator.iterate(keywordInCode(u, kw, 0))(p =>
+      if (p < 0) -1 else keywordInCode(u, kw, p + kw.length))
       .takeWhile(_ >= 0).toSeq.lastOption.getOrElse(-1)
+  }
+
+  /** Clause words that are also function names (`left('x', 2)`,
+    * `any(v)`, `array(1, 2)`, `format('{}', v)`): followed by '(' they are
+    * a call, not a clause. Any other clause word ends a clause even when a
+    * paren follows it (`WHERE (a OR b)`).
+    */
+  private val callableWords = Set("LEFT", "RIGHT", "ANY", "ARRAY", "FORMAT")
 
   /** Exclusive end of the clause starting at `from`: the first `bounds`
-    * keyword at the same depth that does not open a call (`left('x', 2)`
-    * is a function), the enclosing scope's ')', or the end of the text.
+    * keyword at the same depth that does not open a call, the enclosing
+    * scope's ')', or the end of the text.
     */
   def clauseExtent(s: String, from: Int, bounds: Seq[String]): Int = {
     val u = mask(s)
+    def opensCall(k: String, end: Int): Boolean =
+      callableWords(k.toUpperCase(java.util.Locale.ROOT)) && {
+        var j = end
+        while (j < u.length && Character.isWhitespace(u.charAt(j))) j += 1
+        j < u.length && u.charAt(j) == '('
+      }
     var d = 0; var i = from
     while (i < u.length) {
       u.charAt(i) match {
@@ -225,9 +261,7 @@ private[engine] object SqlLexer {
         case ')' => d -= 1; if (d < 0) return i
         case _ if d == 0 =>
           bounds.find(wordAt(u, i, _)).foreach { k =>
-            var j = i + k.length
-            while (j < u.length && Character.isWhitespace(u.charAt(j))) j += 1
-            if (j >= u.length || u.charAt(j) != '(') return i
+            if (!opensCall(k, i + k.length)) return i
           }
         case _ =>
       }

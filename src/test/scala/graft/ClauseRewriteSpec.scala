@@ -89,6 +89,15 @@ class ClauseRewriteSpec extends SparkTestBase {
     assert(ids == Seq(4L))
   }
 
+  test("PREWHERE ends at a WHERE that opens with a paren") {
+    docs()
+    def ids(q: String) = g.sql(q).collect().map(_.getLong(0)).toSeq
+    assert(ids("SELECT id FROM cr_docs PREWHERE score > 6.5 " +
+      "WHERE (domain = 'b.com' OR id = 6) ORDER BY id") == Seq(4L))
+    assert(ids("SELECT id FROM cr_docs PREWHERE (score > 6.5) WHERE (id < 3) ORDER BY id") ==
+      Seq(1L, 2L))
+  }
+
   test("PREWHERE + WHERE + GROUP BY keeps the aggregate clauses intact") {
     docs()
     val r = g.sql(
@@ -410,5 +419,26 @@ class ClauseRewriteSpec extends SparkTestBase {
     val rows = gs.sql("SELECT k, v FROM cr_ins_d ORDER BY k")
       .collect().map(r => (r.getInt(0), r.getString(1))).toSeq
     assert(rows == Seq((0, "seed"), (1, "a--b"), (2, "c/*d*/e")), rows.toString)
+  }
+
+  test("an ANY LEFT JOIN condition ends at a WHERE that opens with a paren") {
+    Seq((1, "a"), (2, "b"), (3, "c")).toDF("k", "lab").createOrReplaceTempView("cr_any_l")
+    Seq((1, "y"), (1, "x"), (2, "z")).toDF("k", "tag").createOrReplaceTempView("cr_any_r")
+    val rows = g.sql(
+      """SELECT l.k, r.tag FROM cr_any_l l ANY LEFT JOIN cr_any_r r ON l.k = r.k
+         WHERE (l.k < 3 OR l.lab = 'c') ORDER BY l.k""")
+      .collect().map(r => (r.getInt(0), Option(r.getString(1)))).toSeq
+    assert(rows == Seq((1, Some("x")), (2, Some("z")), (3, None)), rows.toString)
+  }
+
+  test("an unclosed /* comment fails the statement instead of hiding its tail") {
+    val p = java.nio.file.Files.createTempDirectory("graft_cr_unclosed").toString + "/t"
+    graft.io.DeltaNative.write(Seq((1, 1), (1, 2)).toDF("k", "tenant"), p)
+    val gs = g
+    gs.registerDelta("cr_unclosed_d", p)
+    intercept[Exception](gs.sql("DELETE FROM cr_unclosed_d WHERE k = 1 /* AND tenant = 2"))
+    intercept[Exception](gs.sql("SELECT 1 /* x").collect())
+    assert(gs.sql("SELECT tenant FROM cr_unclosed_d ORDER BY tenant")
+      .collect().map(_.getInt(0)).toSeq == Seq(1, 2))
   }
 }

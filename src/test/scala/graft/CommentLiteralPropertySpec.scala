@@ -22,6 +22,8 @@ class CommentLiteralPropertySpec extends SparkTestBase {
     Seq("SELECT", "n", "FROM cp_big", "SAMPLE 1/4 OFFSET 1/4"),
     Seq("SELECT", "id", "FROM cp_docs", "PREWHERE score > 6.5",
       "WHERE domain = 'b.com' OR id = 6", "ORDER BY id"),
+    Seq("SELECT", "id", "FROM cp_docs", "PREWHERE (score > 6.5)",
+      "WHERE (domain = 'b.com' OR id = 6)", "ORDER BY id"),
     Seq("SELECT", "id, v", "FROM cp_arr", "ARRAY JOIN xs AS v", "ORDER BY id, v"),
     Seq("SELECT", "g, v, x", "FROM cp_q",
       "QUALIFY ROW_NUMBER() OVER (PARTITION BY g ORDER BY x DESC) = 1", "ORDER BY g"),
@@ -31,6 +33,8 @@ class CommentLiteralPropertySpec extends SparkTestBase {
       "ASOF JOIN cp_quotes q", "ON tr.uid = q.uid AND tr.t >= q.qt", "ORDER BY tr.trade"),
     Seq("SELECT", "tr.trade, q.px", "FROM cp_trades tr", "ANY LEFT JOIN cp_quotes q",
       "ON tr.uid = q.uid", "ORDER BY tr.trade"),
+    Seq("SELECT", "tr.trade, q.px", "FROM cp_trades tr", "ANY LEFT JOIN cp_quotes q",
+      "ON tr.uid = q.uid", "WHERE (tr.t > 5 OR q.px > 0)", "ORDER BY tr.trade"),
     Seq("SELECT", "* REPLACE (x * 2 AS x)", "FROM cp_q", "ORDER BY g, v"),
     Seq("SELECT", "* EXCEPT (v) APPLY (abs)", "FROM cp_q"))
 

@@ -14,6 +14,14 @@ class SqlLexerSpec extends AnyFunSuite {
     assert(stripComments(kept) == kept)
   }
 
+  test("an unclosed /* is code, so Spark's parser still sees and reports it") {
+    val q = "DELETE FROM d WHERE k = 1 /* AND tenant = 2"
+    assert(stripComments(q) == q)
+    assert(mask(q) == q)
+    assert(codeStart("/* x SELECT") == 0)
+    assert(stripComments("a /* /* b */ c") == "a /*   c")
+  }
+
   test("mask: same length, literal contents blanked, code and quotes kept") {
     val q = "SELECT 'x\\' FROM t FINAL' AS s, `my FINAL` FROM t FINAL"
     val m = mask(q)
@@ -46,6 +54,8 @@ class SqlLexerSpec extends AnyFunSuite {
     assert(lastTopLevelKeyword("a AS b, (c AS d) AS e", "AS") == 17)
     assert(clauseExtent("x > left('a', 1) WHERE y", 0, Seq("LEFT", "WHERE")) == 17)
     assert(clauseExtent("(a WHERE b) ORDER", 1, Seq("ORDER")) == 10)
+    assert(clauseExtent("a > 5 WHERE (b OR c)", 0, Seq("WHERE")) == 6)
+    assert(clauseExtent("a = any(b) UNION (SELECT 1)", 0, Seq("ANY", "UNION")) == 11)
     assert(codeStart("  -- c\n /* d */ SELECT") == 16)
   }
 }
